@@ -34,8 +34,38 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** Per-query reference seconds: `bench-reference.json` is one flat JSON
+    * object of query name → number. Anything else fails the bench
+    * loudly; an empty map would silently switch the suspect re-run off.
+    */
+  private[graft] def parseReference(json: String): Map[String, Double] = {
+    import scala.jdk.CollectionConverters._
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    require(root != null && root.isObject, "bench-reference.json: top level is not a JSON object")
+    root.properties().asScala.map { e =>
+      require(e.getValue.isNumber, s"bench-reference.json: ${e.getKey} is not a number: ${e.getValue}")
+      e.getKey -> e.getValue.asDouble
+    }.toMap
+  }
+
+  /** The seconds a query keeps after its suspect re-run: the re-run's
+    * time counts only when that run succeeded — a fast failure says
+    * nothing about the query's cost — so otherwise best-of-2 stands.
+    */
+  private[graft] def keptSeconds(bestOf2: Double, rerun: Option[(Double, Option[Throwable])]): Double =
+    rerun match {
+      case Some((sec, None)) => math.min(bestOf2, sec)
+      case _ => bestOf2
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // read first, so a broken reference fails before any timing starts
+    val refMap: Map[String, Double] = {
+      val in = getClass.getResourceAsStream("/bench-reference.json")
+      require(in != null, "bench-reference.json is missing from the classpath")
+      try parseReference(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -179,38 +209,29 @@ object Bench {
     // (either a genuine regression or a long steal episode — the raw
     // pair plus canary readings disambiguate). The re-run only fires
     // for flagged queries, so a clean run keeps the best-of-2 protocol
-    // bit-for-bit.
-    val refMap: Map[String, Double] = try {
-      val in = getClass.getResourceAsStream("/bench-reference.json")
-      if (in == null) Map.empty
-      else {
-        val txt = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        """"([^"]+)":([0-9.]+)""".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case NonFatal(_) => Map.empty }
+    // bit-for-bit. A re-run that throws is recorded as -1 and leaves the
+    // best-of-2 in place (keptSeconds).
     val SuspectFactor = 3.0
     val SuspectFloorSec = 1.0
     val suspectNames = results.collect {
       case (n, s1, s2, None) if refMap.get(n).exists(r =>
         math.min(s1, s2) > math.max(SuspectFloorSec, SuspectFactor * r)) => n
     }
-    val rerunSec: Map[String, Double] = suspectNames.flatMap { n =>
+    val rerun: Map[String, (Double, Option[Throwable])] = suspectNames.flatMap { n =>
       selected.get(n).map { fn =>
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch { case NonFatal(_) => () }
+        val err = try { fn(spark, sfDir).count(); None } catch { case NonFatal(e) => Some(e) }
         val s = (System.nanoTime() - t0) / 1e9
         try spark.catalog.clearCache() catch { case NonFatal(_) => () }
-        n -> s
+        n -> ((s, err))
       }
     }.toMap
     val best = results.map { case (n, s1, s2, e) =>
       val b0 = if (e.isEmpty) math.min(s1, s2) else -1.0
-      val b = rerunSec.get(n).fold(b0)(s3 => math.min(b0, s3))
-      (n, b, s1, s2, e)
+      (n, keptSeconds(b0, rerun.get(n)), s1, s2, e)
     }
     val stillSuspect = best.collect {
-      case (n, b, _, _, None) if rerunSec.contains(n) && refMap.get(n).exists(r =>
+      case (n, b, _, _, None) if rerun.contains(n) && refMap.get(n).exists(r =>
         b > math.max(SuspectFloorSec, SuspectFactor * r)) => n
     }
     val suspectJson =
@@ -218,7 +239,8 @@ object Bench {
       else {
         val rr = suspectNames.map { n =>
           val b0 = results.collectFirst { case (`n`, s1, s2, None) => math.min(s1, s2) }.getOrElse(-1.0)
-          f""""$n":[$b0%.3f,${rerunSec.getOrElse(n, -1.0)}%.3f]"""
+          val s3 = rerun.get(n).collect { case (s, None) => s }.getOrElse(-1.0)
+          f""""$n":[$b0%.3f,$s3%.3f]"""
         }.mkString("{", ",", "}")
         val ss = stillSuspect.map("\"" + _ + "\"").mkString("[", ",", "]")
         s""","suspect_rerun":$rr,"still_suspect":$ss"""

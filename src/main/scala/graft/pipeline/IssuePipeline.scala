@@ -70,9 +70,13 @@ object IssuePipeline {
         else IssueTransform.changelog(raw.limit(0), version))
   }
 
-  /** Latest-version dedup per table on its DDL sort key (A4). */
+  /** Latest-version dedup per table on its DDL sort key (A4). One run
+    * pins one `version` for every row, so a window holding two documents
+    * of one issue ties on it; `updated_at` breaks the tie towards the
+    * newer document, whatever order the source delivers them in.
+    */
   def dedup(p: Payload): Payload = Payload(
-    issues = Dedup.latestByKey(p.issues, sortKeys("issues"), Seq("version")),
+    issues = Dedup.latestByKey(p.issues, sortKeys("issues"), Seq("version", "updated_at")),
     metrics = Dedup.latestByKey(p.metrics, sortKeys("issue_metrics"), Seq("version")),
     changelog = Dedup.latestByKey(p.changelog, sortKeys("issues_changelog"), Seq("version")))
 

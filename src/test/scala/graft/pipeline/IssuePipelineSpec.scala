@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 import graft.schema.{EngineConfig, Schemas}
-import graft.sinks.ParquetSink
+import graft.sinks.{ParquetSink, Sink}
 import graft.state.MemoryStateStore
 import graft.transform.IssueTransform
 
@@ -292,6 +292,46 @@ class IssuePipelineSpec extends SparkSuite {
       version = lit("2024-02-02 00:00:00").cast("timestamp"))
     assert(r3.uploaded && r3.issuesProcessed == 1)
     assert(state.get("last_update_at").contains(t("19:00")))
+  }
+
+  test("one window holding two documents of a key keeps the newer, in either union order") {
+    // one run pins one version for every row, so only updated_at can
+    // tell the re-versioned document from the stale one
+    val keys = (1 to 8).map(i => s"TEST-$i")
+    val base = raw(keys.map(k => issue(k, "Open", updatedAt = t("12:00"))): _*)
+    val delta = raw(keys.map(k => issue(k, "In progress", updatedAt = t("19:00"))): _*)
+    for ((label, src) <- Seq("delta first" -> delta.union(base), "base first" -> base.union(delta))) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-tie").toString
+      val r = IssuePipeline.run(src, sink = new ParquetSink(dir))
+      assert(r.uploaded && r.issuesProcessed == 16, label)
+      val kept = spark.read.parquet(s"$dir/issues").select("issue_key", "status")
+        .as[(String, String)].collect().toMap
+      assert(kept == keys.map(_ -> "in_progress").toMap, label)
+    }
+  }
+
+  test("a failing sink leaves the watermark uncommitted and the scan unpersisted") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fail").toString
+    val state = new MemoryStateStore
+    state.set("last_update_at", t("09:00"))
+    val parquet = new ParquetSink(dir)
+    val failing = new Sink {
+      def write(df: DataFrame, table: String): Unit =
+        if (table == "issue_metrics") throw new java.io.IOException("sink down")
+        else parquet.write(df, table)
+    }
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    val storedBefore = sc.getRDDStorageInfo.map(_.id).toSet
+    val e = intercept[java.io.IOException] {
+      IssuePipeline.run(raw(issue("TEST-1", "Closed", changelog = walkthroughEvents)),
+        sink = failing, state = Some(state))
+    }
+    assert(e.getMessage == "sink down")
+    assert(spark.read.parquet(s"$dir/issues").count() == 1) // the write before the failure landed
+    assert(state.get("last_update_at").contains(t("09:00")))
+    assert(sc.getPersistentRDDs.keySet -- persistedBefore == Set.empty)
+    assert(sc.getRDDStorageInfo.map(_.id).toSet -- storedBefore == Set.empty)
   }
 
   test("daemon ticks drive incremental stateful runs (scheduler thread + watermark)") {

@@ -1,6 +1,18 @@
 package graft.sinks
 
+import java.sql.Timestamp
+
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 
 import graft.SparkSuite
 
@@ -104,6 +116,98 @@ class SinksSpec extends SparkSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS sink_spec_issues")
       spark.sql("DROP TABLE IF EXISTS sink_spec_metrics")
+    }
+  }
+
+  // ---- the parquet encoding of ParquetSink and BucketedTableSink ----
+
+  private val TsKey = "spark.sql.parquet.outputTimestampType"
+
+  private def ts(s: String): Timestamp = Timestamp.valueOf(s)
+
+  // micros precision, a pre-epoch instant and nulls: what INT96 carried
+  private lazy val stamped: DataFrame = Seq(
+    ("K-1", Some(ts("2024-01-09 18:00:00.123456")), Some(ts("1969-12-31 23:59:59.999999")), 1),
+    ("K-2", None, Some(ts("2024-02-29 00:00:00")), 2),
+    ("K-3", Some(ts("2024-03-01 12:30:00.5")), None, 3),
+    ("K-4", None, None, 4)).toDF("issue_key", "updated_at", "closed_at", "n").repartition(2)
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Assert every data file is zstd throughout and stores each timestamp
+    * column as INT64 TIMESTAMP(MICROS); returns the timestamp column names.
+    */
+  private def assertEncoding(files: Seq[String]): Set[String] = {
+    assert(files.nonEmpty)
+    files.flatMap { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(f), spark.sparkContext.hadoopConfiguration))
+      try {
+        val footer = reader.getFooter
+        val chunks = footer.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        assert(chunks.nonEmpty, f)
+        assert(chunks.forall(_.getCodec == CompressionCodecName.ZSTD), f)
+        val prims = footer.getFileMetaData.getSchema.getColumns.asScala.map(_.getPrimitiveType)
+        assert(!prims.exists(_.getPrimitiveTypeName == PrimitiveTypeName.INT96), f)
+        prims.collect { p => p.getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation =>
+            assert(p.getPrimitiveTypeName == PrimitiveTypeName.INT64, f)
+            assert(t.getUnit == TimeUnit.MICROS, f)
+            p.getName
+        } }
+      } finally reader.close()
+    }.toSet
+  }
+
+  private def withTsConf[T](callers: Option[String])(body: => T): T = {
+    callers.fold(spark.conf.unset(TsKey))(spark.conf.set(TsKey, _))
+    try body finally spark.conf.unset(TsKey)
+  }
+
+  private def tsConf: Option[String] = spark.conf.getAll.get(TsKey)
+
+  test("ParquetSink writes zstd pages and INT64 TIMESTAMP_MICROS in every data file") {
+    val dir = tempDir("graft-enc")
+    new ParquetSink(dir).write(stamped, "t")
+    val files = spark.read.parquet(s"$dir/t").inputFiles.toSeq
+    assert(assertEncoding(files) == Set("updated_at", "closed_at"))
+  }
+
+  test("BucketedTableSink writes the same encoding") {
+    try {
+      new BucketedTableSink(buckets = 2, keys = Seq("issue_key")).write(stamped, "sink_spec_stamped")
+      val files = spark.table("sink_spec_stamped").inputFiles.toSeq
+      assert(assertEncoding(files) == Set("updated_at", "closed_at"))
+    } finally spark.sql("DROP TABLE IF EXISTS sink_spec_stamped")
+  }
+
+  test("ParquetSink round-trips rows exactly, null timestamps included") {
+    val dir = tempDir("graft-rt")
+    new ParquetSink(dir).write(stamped, "t")
+    val back = spark.read.parquet(s"$dir/t")
+    // parquet reads every column back nullable; names and types must match
+    assert(back.schema.map(f => f.name -> f.dataType) == stamped.schema.map(f => f.name -> f.dataType))
+    assert(back.collect().toSet == stamped.collect().toSet)
+    assert(back.where(col("updated_at").isNull).count() == 2)
+  }
+
+  test("the caller's outputTimestampType is left as found: unset, INT96, and a failing write") {
+    withTsConf(None) {
+      new ParquetSink(tempDir("graft-conf")).write(stamped, "t")
+      assert(tsConf.isEmpty)
+    }
+    withTsConf(Some("INT96")) {
+      new ParquetSink(tempDir("graft-conf")).write(stamped, "t")
+      assert(tsConf.contains("INT96"))
+    }
+    val boom = stamped.withColumn("n",
+      when(col("n") === 3, raise_error(lit("sink spec boom"))).otherwise(col("n")))
+    for (callers <- Seq(None, Some("TIMESTAMP_MILLIS"))) withTsConf(callers) {
+      val e = intercept[Exception](new ParquetSink(tempDir("graft-conf")).write(boom, "t"))
+      assert(String.valueOf(e.getMessage).contains("sink spec boom") ||
+        String.valueOf(e.getCause).contains("sink spec boom"), e)
+      assert(tsConf == callers)
     }
   }
 }
