@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.graft.GraftBridge
 import org.apache.spark.sql.functions._
 
 import graft.functions.TimeFns
@@ -99,7 +100,7 @@ object IssuePipeline {
     * bounded; a library scanning a finite source need not be).
     *
     * Comparisons happen on PARSED timestamps, not wire strings — see the
-    * watermark note in [[run]]. The function-of-column predicate
+    * watermark note on `windowStats`. The function-of-column predicate
     * evaluates inside the scan's codegen stage (not as a parquet
     * PushedFilter); at 100 TB raw documents land date-partitioned and
     * the same bound prunes partitions via the partition column.
@@ -131,6 +132,22 @@ object IssuePipeline {
     * stateful mode filters it above the committed watermark
     * (etl.py:80-89), transforms, writes the three tables, and commits the
     * new watermark only after all writes succeed (etl.py:242-256).
+    *
+    * Single pass. The bounded window is cached, so the three tables and
+    * the watermark come from one snapshot of a source that may change
+    * under the run, and nothing is computed before the writes except one
+    * aggregate over that window (`windowStats`). Where each
+    * [[RunStats]] field comes from:
+    *   - `issuesProcessed` (documents read), `issuesWithoutMetrics` and
+    *     `newWatermark`: the window aggregate, which also fills the cache;
+    *   - `metricsRows` and `changelogRows`: the `issue_metrics` and
+    *     `issues_changelog` writes themselves, through an [[Observation]]
+    *     on each frame (`writtenRows`).
+    * A run over the README walkthrough costs 10 Spark jobs (AQE runs each
+    * shuffle stage and each cache fill as its own job): the cache fill,
+    * the aggregate's two shuffle stages and result, and a dedup shuffle
+    * plus the write for each table. It cost 27 while the counts and the
+    * watermark were separate actions.
     */
   def run(source: DataFrame,
           cfg: EngineConfig = EngineConfig(),
@@ -146,44 +163,80 @@ object IssuePipeline {
     val ver = Option(version).getOrElse(
       lit(new java.sql.Timestamp(System.currentTimeMillis())).cast("timestamp"))
 
-    // Watermark comparison happens on PARSED timestamps, not wire strings:
-    // ISO-8601 strings with mixed UTC offsets do not sort chronologically
-    // as text ('...16:30+0000' < '...18:00+0300' lexicographically even
-    // though it is the later instant).
     val watermark = state.flatMap(_.get(stateKey))
-    val updatedTs = TimeFns.parseTrackerDatetime(col("updatedAt"))
     val bounded = scanFilter(cfg, watermark, now)
       .map(source.where).getOrElse(source)
-      .cache() // read once: counts, transform, and the watermark agg share it
+      .cache() // one snapshot: the window aggregate, the three writes
 
     try {
+      val window = windowStats(bounded)
       // Early exit: nothing to export (etl.py:143-145).
-      val nIssues = bounded.count()
-      if (nIssues == 0) return RunStats(0, 0, 0, 0, watermark, uploaded = false)
+      if (window.documents == 0) return RunStats(0, 0, 0, 0, watermark, uploaded = false)
 
       val payload = dedup(transform(bounded, cfg, ver))
-      val nMetrics = payload.metrics.count()
-      val nChangelog = payload.changelog.count()
-      // P10: distinct issues that produced no metric rows (empty/filtered
-      // changelog) — distinct on both sides so a window holding several
-      // versions of one issue is not overcounted.
-      val nDistinctIssues = bounded.select(col("key")).distinct().count()
-      val nWithoutMetrics = nDistinctIssues - payload.metrics.select("issue_key").distinct().count()
-
+      val metricsRows = Observation("issue_metrics_rows")
+      val changelogRows = Observation("issues_changelog_rows")
       sink.write(payload.issues, "issues")
-      sink.write(payload.metrics, "issue_metrics")
-      sink.write(payload.changelog, "issues_changelog")
+      sink.write(payload.metrics.observe(metricsRows, count(lit(1))), "issue_metrics")
+      sink.write(payload.changelog.observe(changelogRows, count(lit(1))), "issues_changelog")
+      val stats = RunStats(window.documents, writtenRows(metricsRows, payload.metrics),
+        writtenRows(changelogRows, payload.changelog),
+        window.keys - window.keysWithMetrics, window.watermark.orElse(watermark), uploaded = true)
 
       // Commit-after-write ordering: the watermark moves only once every
       // table landed, so a failed run re-reads the same window and dedup
       // collapses the duplicates (exactly the reference's tolerance level).
-      // The committed value is the wire string of the chronologically max
-      // updatedAt (null-guarded: an all-null window commits nothing).
-      val newWm = bounded
-        .agg(max_by(col("updatedAt"), updatedTs).as("wm"))
-        .collect()(0).getString(0)
-      Option(newWm).foreach(w => state.foreach(_.set(stateKey, w)))
-      RunStats(nIssues, nMetrics, nChangelog, nWithoutMetrics, Option(newWm).orElse(watermark), uploaded = true)
+      window.watermark.foreach(w => state.foreach(_.set(stateKey, w)))
+      stats
     } finally bounded.unpersist()
+  }
+
+  /** What one aggregate over the bounded window yields: documents read,
+    * distinct issue keys (a null key counts as one), the keys with at
+    * least one valid status transition — exactly the keys that get
+    * `issue_metrics` rows (P10: the others still load an issue row,
+    * etl.py:173-177) — and the watermark to commit.
+    */
+  private final case class WindowStats(documents: Long, keys: Long, keysWithMetrics: Long,
+                                       watermark: Option[String])
+
+  /** The watermark is the wire string of the chronologically max
+    * `updatedAt`, compared on PARSED timestamps, not wire strings:
+    * ISO-8601 strings with mixed UTC offsets do not sort chronologically
+    * as text ('...16:30+0000' < '...18:00+0300' lexicographically even
+    * though it is the later instant). An all-null window has none.
+    */
+  private def windowStats(bounded: DataFrame): WindowStats = {
+    val updatedTs = TimeFns.parseTrackerDatetime(col("updatedAt"))
+    val hasTransition = exists(col("changelog"),
+      ev => IssueTransform.isStatusTransition(ev, col("createdAt")))
+    val r = bounded
+      .groupBy(col("key"))
+      .agg(
+        count(lit(1)).as("documents"),
+        max(hasTransition).as("has_metrics"),
+        max_by(col("updatedAt"), updatedTs).as("wm"),
+        max(updatedTs).as("wm_ts"))
+      .agg(
+        coalesce(sum(col("documents")), lit(0L)),
+        count(lit(1)),
+        count_if(col("has_metrics")),
+        max_by(col("wm"), col("wm_ts")))
+      .head()
+    WindowStats(r.getLong(0), r.getLong(1), r.getLong(2), Option(r.getString(3)))
+  }
+
+  /** Rows the sink's write counted through `obs`. Spark completes an
+    * [[Observation]] from its asynchronous listener bus after the action
+    * returns, so the bus is drained before reading it. A sink that never
+    * ran the frame leaves the observation empty; the frame is then
+    * counted explicitly — still exact, since the window is cached.
+    */
+  private def writtenRows(obs: Observation, frame: DataFrame): Long = {
+    if (!obs.future.isCompleted)
+      try GraftBridge.drainListenerBus(frame.sparkSession)
+      catch { case _: java.util.concurrent.TimeoutException => () }
+    obs.future.value.flatMap(_.toOption).filter(_.length == 1).map(_.getLong(0))
+      .getOrElse(frame.count())
   }
 }

@@ -169,10 +169,12 @@ object PipelineFixture {
       .groupBy(col("user_id"))
       .agg(
         sort_array(collect_list(struct(col("ts"), col("event_id"), eventStruct.as("ev")))).as("evs"),
-        min(col("prev_ts")).as("created"))
+        min(col("prev_ts")).as("created"),
+        max(col("ts")).as("updated"))
       .select(
         concat(lit("U"), col("user_id").cast("string")).as("key"),
         fmt(col("created")).as("createdAt"),
+        fmt(col("updated")).as("updatedAt"),
         transform(col("evs"), x => x.getField("ev")).as("changelog"))
     IssueTransform.metrics(IssueTransform.workflowEvents(raw), lit(null).cast("timestamp"))
       .drop("version")

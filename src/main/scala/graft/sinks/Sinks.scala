@@ -2,7 +2,13 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 
-/** Output seam ≙ the reference's load stage (etl.py:193-200). */
+/** Output seam ≙ the reference's load stage (etl.py:193-200).
+  *
+  * `IssuePipeline.run` counts the rows of a table from the sink's first
+  * action on the frame (an `Observation`), so that action must compute
+  * every row of it, as a file or table write does. A sink that never runs
+  * a frame is fine: the run then counts it separately.
+  */
 trait Sink extends Serializable {
   def write(df: DataFrame, table: String): Unit
 }
@@ -70,10 +76,13 @@ final class BucketedTableSink(buckets: Int, keys: Seq[String]) extends Sink {
       .saveAsTable(table))
 }
 
-/** S9 console sink (dry run, etl.py:260-264). */
+/** S9 console sink (dry run, etl.py:260-264). The header's row count
+  * runs the whole frame first: `show` alone computes only the rows it
+  * prints, and the pipeline counts a table from the sink's first action.
+  */
 final class ConsoleSink(rows: Int = 20) extends Sink {
   def write(df: DataFrame, table: String): Unit = {
-    println(s"== $table")
+    println(s"== $table (${df.count()} rows)")
     df.show(rows, truncate = false)
   }
 }

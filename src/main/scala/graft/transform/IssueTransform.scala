@@ -1,6 +1,7 @@
 package graft.transform
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{BusinessTime, StringFns, TimeFns}
@@ -13,9 +14,10 @@ import graft.schema.EngineConfig
   * (models/issue.py:74-258): the projection is one `select`, the changelog
   * walk is `posexplode` + filters, the metric accumulator is a hash
   * aggregate, and the per-issue scalars derived from the changelog
-  * (closed_at fallback, moved flags) come back via equi-joins on
-  * `issue_key` — all shuffle boundaries are keyed by issue, so at 100 TB
-  * the whole pipeline is one partition-local pass after a single exchange.
+  * (closed_at fallback, moved flags) are array filters over each
+  * document's own changelog — every shuffle boundary is keyed by issue,
+  * so at 100 TB each table is one partition-local pass after a single
+  * exchange.
   */
 object IssueTransform {
 
@@ -31,37 +33,52 @@ object IssueTransform {
 
   private def emptyStrArray: Column = array().cast("array<string>")
 
+  /** Whether changelog event `ev` is a valid status transition
+    * (models/issue.py:169-199): an `IssueWorkflow` event with ≥2 fields,
+    * fields[0].field.id == "status", and a parseable datetime range whose
+    * start falls back to the document's `createdAt` (issue.py:185). An
+    * unparseable wire datetime nulls out under try-parse; the event is
+    * dropped like the reference's per-row error isolation drops it (P9,
+    * etl.py:180-183), so downstream durations and last_seen stay
+    * non-null. The one predicate behind [[workflowEvents]], the
+    * per-document `closed_at` scalar of [[issues]], and the run's count
+    * of issues without metrics.
+    */
+  def isStatusTransition(ev: Column, createdRaw: Column): Column =
+    ev.getField("type") === "IssueWorkflow" &&
+      size(ev.getField("fields")) >= 2 &&
+      ev.getField("fields")(0).getField("field").getField("id") === "status" &&
+      transitionStart(ev, createdRaw).isNotNull && transitionEnd(ev).isNotNull
+
+  private def transitionStart(ev: Column, createdRaw: Column): Column =
+    parseDt(coalesce(ev.getField("fields")(1).getField("from").getField("s"), createdRaw))
+
+  private def transitionEnd(ev: Column): Column =
+    parseDt(ev.getField("fields")(1).getField("to").getField("s"))
+
+  private def transitionStatus(ev: Column, side: String): Column =
+    snakeLower(ev.getField("fields")(0).getField(side).getField("ref").getField("name"))
+
   /** Workflow status-transition events, one row per valid transition
-    * (models/issue.py:169-199): `IssueWorkflow` events with ≥2 fields,
-    * fields[0].field.id == "status", non-null datetime range; the first
-    * transition's start anchors at `createdAt` (issue.py:185).
-    * `pos` is the changelog array index (event order — used for
-    * set-once/last-wins semantics downstream).
+    * ([[isStatusTransition]]). `pos` is the changelog array index (event
+    * order — used for set-once/last-wins semantics downstream);
+    * `updated_at` is the parsed `updatedAt` of the document the event
+    * came from, which tells two documents of one issue apart.
     */
   def workflowEvents(raw: DataFrame, cfg: EngineConfig = EngineConfig()): DataFrame =
     raw
       .select(
         col("key").as("issue_key"),
+        parseDt(col("updatedAt")).as("updated_at"),
         col("createdAt").as("_created_raw"),
         posexplode(col("changelog")).as(Seq("pos", "ev")))
-      .where(col("ev.type") === "IssueWorkflow")
-      .where(size(col("ev.fields")) >= 2)
-      .where(col("ev.fields")(0).getField("field").getField("id") === "status")
+      .where(isStatusTransition(col("ev"), col("_created_raw")))
       .select(
-        col("issue_key"), col("pos"),
-        snakeLower(col("ev.fields")(0).getField("from").getField("ref").getField("name")).as("status_name"),
-        snakeLower(col("ev.fields")(0).getField("to").getField("ref").getField("name")).as("to_status"),
-        coalesce(col("ev.fields")(1).getField("from").getField("s"), col("_created_raw")).as("_start_raw"),
-        col("ev.fields")(1).getField("to").getField("s").as("_end_raw"))
-      .where(col("_start_raw").isNotNull && col("_end_raw").isNotNull)
-      .select(
-        col("issue_key"), col("pos"), col("status_name"), col("to_status"),
-        parseDt(col("_start_raw")).as("start_ts"),
-        parseDt(col("_end_raw")).as("end_ts"))
-      // an unparseable wire datetime nulls out under try-parse; drop the
-      // event like the reference's per-row error isolation drops it (P9,
-      // etl.py:180-183) — downstream durations/last_seen stay non-null
-      .where(col("start_ts").isNotNull && col("end_ts").isNotNull)
+        col("issue_key"), col("updated_at"), col("pos"),
+        transitionStatus(col("ev"), "from").as("status_name"),
+        transitionStatus(col("ev"), "to").as("to_status"),
+        transitionStart(col("ev"), col("_created_raw")).as("start_ts"),
+        transitionEnd(col("ev")).as("end_ts"))
       .withColumn("duration", abs(TimeFns.timedeltaSeconds(col("end_ts"), col("start_ts"))))
       .withColumn("busdays_duration",
         BusinessTime.businessSecondsUdf(cfg.calendar)(col("start_ts"), col("end_ts")))
@@ -70,9 +87,20 @@ object IssueTransform {
     * (models/issue.py:212-224, row class :43-62). `last_seen` is the end
     * time of the *first* event that created the group (set once —
     * `min_by(end_ts, pos)`), durations/counts accumulate.
+    *
+    * Only the newest document of an issue counts: a window may hold a
+    * re-versioned document next to the one it replaces, and both carry the
+    * shared history, so accumulating over both would count each old
+    * transition twice. The newest is the max `updated_at` among the
+    * documents with transitions — the document the issues dedup keeps,
+    * since a Tracker changelog only grows. Documents tied on `updated_at`
+    * all count. The window is partitioned by `issue_key`, which already
+    * satisfies the aggregate's distribution: no extra shuffle.
     */
   def metrics(workflow: DataFrame, version: Column): DataFrame =
     workflow
+      .withColumn("_newest", max(col("updated_at")).over(Window.partitionBy(col("issue_key"))))
+      .where(col("updated_at") <=> col("_newest"))
       .groupBy(col("issue_key"), col("status_name"))
       .agg(
         count(lit(1)).cast("int").as("status_transitions_count"),
@@ -93,27 +121,22 @@ object IssueTransform {
     * resolved time if resolved, else end time of the last transition into
     * a closed status when the current status is closed) and
     * was_moved/moved_at/moved_by (issue.py:162-167, last IssueMoved wins).
-    */
-  /** U1 extensibility: extra user columns appended to the projection —
+    * Each scalar is read from the document's own `changelog` array (the
+    * last matching element), so a row never mixes two documents of one
+    * issue, and the projection needs no aggregate or join.
+    *
+    * U1 extensibility: extra user columns appended to the projection —
     * the Spark-first replacement for subclassing `TrackerIssue`
     * (examples/extended_model/main.py:9-31): each (name, expression over
     * the raw document) lands as an additional output column.
     */
   def issues(raw: DataFrame, cfg: EngineConfig = EngineConfig(), version: Column = current_timestamp(),
              extraColumns: Seq[(String, Column)] = Nil): DataFrame = {
-    val wf = workflowEvents(raw, cfg)
     val closedSeq = cfg.closedStatuses.toSeq.sorted
-    val lastClosed = wf
-      .where(col("to_status").isInCollection(closedSeq))
-      .groupBy(col("issue_key"))
-      .agg(max_by(col("end_ts"), col("pos")).as("_last_closed_end"))
-    val moved = raw
-      .select(col("key").as("issue_key"), posexplode(col("changelog")).as(Seq("pos", "ev")))
-      .where(col("ev.type") === "IssueMoved")
-      .groupBy(col("issue_key"))
-      .agg(
-        max_by(parseDt(col("ev.updatedAt")), col("pos")).as("_moved_at"),
-        max_by(low(col("ev.updatedBy.email")), col("pos")).as("_moved_by"))
+    def last(p: Column => Column): Column = try_element_at(filter(col("changelog"), p), lit(-1))
+    val lastClosing = last(ev =>
+      isStatusTransition(ev, col("createdAt")) && transitionStatus(ev, "to").isInCollection(closedSeq))
+    val lastMove = last(ev => ev.getField("type") === "IssueMoved")
 
     val extra = extraColumns.map { case (n, c) => c.as(n) }
     val proj = raw.select(Seq(
@@ -123,7 +146,7 @@ object IssueTransform {
       // lowercase BEFORE snake_casing (validate_resource low=True then
       // to_snake_case, helpers.py:91-99 + models/issue.py:83-86): the
       // reference maps 'InProgress' → 'inprogress', not 'in_progress' —
-      // and workflowEvents' to_status uses the same composition, so the
+      // and the transitions' to-status uses the same composition, so the
       // is_closed/closed_at comparisons below see consistent spellings
       snakeLower(col("type.name")).as("issue_type"),
       low(col("priority.name")).as("priority"),
@@ -145,11 +168,11 @@ object IssueTransform {
       coalesce(transform(col("sprint"), s => s.getField("name")), emptyStrArray).as("sprints"),
       col("parent.key").as("parent_issue_key"),
       col("epic.key").as("epic_issue_key"),
-      coalesce(col("aliases"), emptyStrArray).as("aliases")) ++ extra: _*)
+      coalesce(col("aliases"), emptyStrArray).as("aliases"),
+      transitionEnd(lastClosing).as("_last_closed_end"),
+      lastMove.as("_last_move")) ++ extra: _*)
 
     proj
-      .join(lastClosed, Seq("issue_key"), "left")
-      .join(moved, Seq("issue_key"), "left")
       .withColumn("is_resolved", col("resolution").isNotNull)
       // coalesce keeps is_closed BOOLEAN-not-null for a null status:
       // Python's `None in closed` is False, while SQL's `null IN (...)`
@@ -160,9 +183,9 @@ object IssueTransform {
       .withColumn("closed_at",
         when(col("is_resolved") && col("resolved_at").isNotNull, col("resolved_at"))
           .when(col("status").isInCollection(closedSeq), col("_last_closed_end")))
-      .withColumn("was_moved", col("_moved_at").isNotNull)
-      .withColumn("moved_at", col("_moved_at"))
-      .withColumn("moved_by", col("_moved_by"))
+      .withColumn("moved_at", parseDt(col("_last_move.updatedAt")))
+      .withColumn("moved_by", low(col("_last_move.updatedBy.email")))
+      .withColumn("was_moved", col("moved_at").isNotNull)
       .withColumn("version", version)
       .select(Seq(
         col("version"), col("queue"), col("title"), col("issue_key"), col("issue_type"),

@@ -1,11 +1,15 @@
 package graft.pipeline
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftBridge
 
 import graft.SparkSuite
 import graft.schema.{EngineConfig, Schemas}
-import graft.sinks.{ParquetSink, Sink}
+import graft.sinks.{BucketedTableSink, ClickHouseBatchSink, ConsoleSink, ParquetSink, Sink, SinksSpec}
 import graft.state.MemoryStateStore
 import graft.transform.IssueTransform
 
@@ -332,6 +336,107 @@ class IssuePipelineSpec extends SparkSuite {
     assert(state.get("last_update_at").contains(t("09:00")))
     assert(sc.getPersistentRDDs.keySet -- persistedBefore == Set.empty)
     assert(sc.getRDDStorageInfo.map(_.id).toSet -- storedBefore == Set.empty)
+  }
+
+  test("issue_metrics come from the newest document of a key, in either union order") {
+    // the re-versioned document repeats the walkthrough history and adds
+    // one transition; counting both documents doubles every old one
+    val reopen = wfEvent(t("19:00"), Seq(statusField("Closed", "Open"), dtField(t("18:00"), t("19:00"))))
+    val older = issue("TEST-1", "Closed", changelog = walkthroughEvents)
+    val newer = issue("TEST-1", "Open", updatedAt = t("19:00"), changelog = walkthroughEvents :+ reopen)
+    val v = lit("2024-02-01 00:00:00").cast("timestamp")
+    val want = IssueTransform.metrics(IssueTransform.workflowEvents(raw(newer)), v).collect().toSet
+    assert(want.size == 5)
+    for ((label, src) <- Seq("newer first" -> raw(newer, older), "older first" -> raw(older, newer))) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-newest").toString
+      val r = IssuePipeline.run(src, sink = new ParquetSink(dir), version = v)
+      assert(spark.read.parquet(s"$dir/issue_metrics").collect().toSet == want, label)
+      assert(r.metricsRows == 5 && r.issuesWithoutMetrics == 0 && r.issuesProcessed == 2, label)
+    }
+  }
+
+  test("closed_at, moved_at and moved_by of the kept row come from the kept document") {
+    def moved(at: String, by: String): Row =
+      Row(at, "IssueMoved", "api", Row(by, "Mover"), Seq.empty[Row])
+    def closing(end: String): Row =
+      wfEvent(end, Seq(statusField("Open", "Closed"), dtField(null, end)))
+    // the stale document's matching events sit at higher changelog
+    // positions, so a per-key last-by-position pick would take them
+    val stale = issue("TEST-1", "Closed", updatedAt = t("12:00"), changelog = Seq(
+      closing(t("09:00")), moved(t("09:30"), "Old@Example.com"),
+      moved(t("10:30"), "Old@Example.com"), closing(t("11:30"))))
+    val kept = issue("TEST-1", "Closed", updatedAt = t("19:00"), changelog = Seq(
+      closing(t("08:00")), moved(t("08:30"), "New@Example.com")))
+    for ((label, src) <- Seq("kept first" -> raw(kept, stale), "stale first" -> raw(stale, kept))) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-scalars").toString
+      IssuePipeline.run(src, sink = new ParquetSink(dir))
+      val rows = spark.read.parquet(s"$dir/issues").collect()
+      assert(rows.length == 1, label)
+      val r = rows(0)
+      assert(r.getAs[java.sql.Timestamp]("updated_at").toInstant.toString == "2024-01-09T19:00:00Z", label)
+      assert(r.getAs[java.sql.Timestamp]("closed_at").toInstant.toString == "2024-01-09T08:00:00Z", label)
+      assert(r.getAs[java.sql.Timestamp]("moved_at").toInstant.toString == "2024-01-09T08:30:00Z", label)
+      assert(r.getAs[String]("moved_by") == "new@example.com", label)
+    }
+  }
+
+  /** Spark jobs started while `f` runs. The bus is drained before the
+    * listener is added, so no earlier job's event reaches it, and again
+    * before it is read, because job events arrive asynchronously.
+    */
+  private def jobsDuring(f: => Unit): Int = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      GraftBridge.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("one run over the walkthrough costs at most 10 Spark jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val jobs = jobsDuring(IssuePipeline.run(walkthrough, sink = new ParquetSink(dir),
+      version = lit("2024-02-01 00:00:00").cast("timestamp")))
+    assert(jobs <= 10, s"$jobs jobs")
+  }
+
+  test("RunStats are identical under every sink; a sink that skips a table gets an exact count") {
+    val src = raw(
+      issue("TEST-1", "Closed", changelog = walkthroughEvents),
+      issue("TEST-2", "Open", updatedAt = t("12:00")),
+      issue("TEST-3", "Open", updatedAt = t("12:00"), changelog = Seq(
+        Row(t("11:00"), "IssueMoved", "api", Row("Mover@Example.com", "Mover"), Seq.empty[Row]))))
+    val v = lit("2024-02-01 00:00:00").cast("timestamp")
+    // walkthrough: 4 metric rows and 6 events x 2 fields of changelog rows;
+    // TEST-2 and TEST-3 have no transition, and TEST-3's move no field
+    val want = IssuePipeline.RunStats(3, 4, 12, 2, Some(t("18:00")), uploaded = true)
+    val base = java.nio.file.Files.createTempDirectory("graft-every-sink").toString
+    SinksSpec.captured.clear()
+    val sinks = Seq(
+      "parquet" -> new ParquetSink(base),
+      "bucketed" -> new BucketedTableSink(buckets = 2, keys = Seq("issue_key")),
+      "clickhouse" -> new ClickHouseBatchSink(SinksSpec.capture),
+      "console" -> new ConsoleSink(rows = 1))
+    try for ((label, sink) <- sinks)
+      assert(IssuePipeline.run(src, sink = sink, version = v) == want, label)
+    finally Seq("issues", "issue_metrics", "issues_changelog")
+      .foreach(tb => spark.sql(s"DROP TABLE IF EXISTS $tb"))
+    def inserted(table: String): Int = SinksSpec.captured.toList
+      .filter(_.startsWith(s"INSERT INTO agile.$table "))
+      .map("\"issue_key\":".r.findAllIn(_).size).sum
+    assert(inserted("issue_metrics") == 4 && inserted("issues_changelog") == 12)
+
+    val parquet = new ParquetSink(java.nio.file.Files.createTempDirectory("graft-skip").toString)
+    val skipping = new Sink {
+      def write(df: DataFrame, table: String): Unit =
+        if (table != "issues_changelog") parquet.write(df, table)
+    }
+    assert(IssuePipeline.run(src, sink = skipping, version = v) == want)
   }
 
   test("daemon ticks drive incremental stateful runs (scheduler thread + watermark)") {
