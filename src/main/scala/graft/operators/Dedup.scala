@@ -23,9 +23,14 @@ import graft.operators.Materialize.MatOps
   */
 object Dedup {
 
-  /** Keep the max-`version` row per key — a single partial-aggregating
-    * hash aggregate (`max_by(struct(*), version)`), cheaper at scale than
-    * a `row_number` window (no per-partition sort, map-side combine).
+  /** Keep the max-`version` row per key with `max_by(struct(*), version)`.
+    * The struct makes the aggregation buffer variable-width, so Spark
+    * plans a sort-based aggregate, not a hash aggregate: sort on the keys,
+    * partial `SortAggregate`, hash exchange on the keys, sort, final
+    * `SortAggregate`. The partial pass combines each key's rows before the
+    * shuffle, which pays off when keys repeat within a partition. Input
+    * already clustered on a subset of the keys skips the exchange, and
+    * both passes then run after a single sort.
     */
   def latestByKey(df: DataFrame, keys: Seq[String], versionCols: Seq[String]): DataFrame = {
     val all = struct(df.columns.map(col).toSeq: _*)

@@ -134,24 +134,6 @@ object TextAnalysis {
   def ngramStats(text: Column, n: Int): Column =
     ExpressionUtils.column(NgramStats(ExpressionUtils.expression(text), n))
 
-  /** Reference HOF form of [[ngramStats]] (kept for equivalence tests):
-    * builds the n-gram sequence WITH duplicates, then counts each distinct
-    * gram with an O(d·n) filter scan — string-exact counts, so agreement
-    * with the hashed kernel also rules out collisions on the corpus.
-    */
-  def ngramStatsHof(text: Column, n: Int): Column = {
-    val toks = split(lower(trim(text)), "\\s+")
-    val grams = filter(
-      transform(sequence(lit(0), greatest(size(toks) - n, lit(0))), i =>
-        when(size(toks) >= n, concat_ws(" ", (0 until n).map(j => element_at(toks, i + j + 1)): _*))),
-      x => x.isNotNull)
-    val counts = transform(array_distinct(grams), g => size(filter(grams, x => x === g)))
-    when(size(grams) > 0, struct(
-      size(grams).as("n_ngrams"),
-      array_max(counts).as("top_count"),
-      aggregate(counts, lit(0), (acc, c) => acc + when(c > 1, c).otherwise(0)).as("dup_occurrences")))
-  }
-
   /** Gopher-style repetition quality signals (Rae et al. 2021, §A1.1):
     * per document, the fraction of 2-/3-gram occurrences taken by the
     * single most frequent n-gram and the fraction belonging to any

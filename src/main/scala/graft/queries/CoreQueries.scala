@@ -154,7 +154,9 @@ object CoreQueries {
     events(s, d).agg(max(col("ts")).as("watermark"), count(lit(1)).as("n_rows"))
 
   /** A4: latest-version dedup per key (ReplacingMergeTree-FINAL semantics)
-    * via a single hash aggregate, not a window sort.
+    * via [[Dedup.latestByKey]]'s sort-based aggregate, not a window. Each
+    * `user_id` has many events, so the partial pass before the exchange
+    * shuffles one row per user and partition instead of every event.
     */
   def a4DedupLatest(s: SparkSession, d: String): DataFrame =
     Dedup.latestByKey(

@@ -4,8 +4,17 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSuite
 import graft.schema.{EngineConfig, Schemas}
@@ -352,6 +361,83 @@ class IssuePipelineSpec extends SparkSuite {
       val r = IssuePipeline.run(src, sink = new ParquetSink(dir), version = v)
       assert(spark.read.parquet(s"$dir/issue_metrics").collect().toSet == want, label)
       assert(r.metricsRows == 5 && r.issuesWithoutMetrics == 0 && r.issuesProcessed == 2, label)
+    }
+  }
+
+  test("run writes issue_metrics without a dedup: transform's metrics are unique on the sort key") {
+    // TEST-1: a newer document appends a transition; TEST-2: two documents
+    // tied on updated_at, so both count towards one group per status
+    val reopen = wfEvent(t("19:00"), Seq(statusField("Closed", "Open"), dtField(t("18:00"), t("19:00"))))
+    val docs = Seq(
+      issue("TEST-1", "Closed", changelog = walkthroughEvents),
+      issue("TEST-1", "Open", updatedAt = t("19:00"), changelog = walkthroughEvents :+ reopen),
+      issue("TEST-2", "Closed", changelog = walkthroughEvents),
+      issue("TEST-2", "Closed", changelog = walkthroughEvents.take(3)))
+    val v = lit("2024-02-01 00:00:00").cast("timestamp")
+    val keys = IssuePipeline.sortKeys("issue_metrics").map(col)
+    for ((label, src) <- Seq("in order" -> raw(docs: _*), "reversed" -> raw(docs.reverse: _*))) {
+      val tables = IssuePipeline.transform(src, version = v)
+      assert(tables.metrics.groupBy(keys: _*).count().where(col("count") > 1).isEmpty, label)
+      val dir = java.nio.file.Files.createTempDirectory("graft-metrics").toString
+      val r = IssuePipeline.run(src, sink = new ParquetSink(dir), version = v)
+      val written = spark.read.parquet(s"$dir/issue_metrics").collect().toSet
+      assert(written == IssuePipeline.dedup(tables).metrics.collect().toSet, label)
+      assert(written.size == 9 && r.metricsRows == 9, label) // 5 statuses of TEST-1, 4 of TEST-2
+    }
+  }
+
+  /** Every node of an executed plan, descending into AQE's final plan and
+    * its query stages.
+    */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec => planNodes(s.plan)
+    case other => other.children.flatMap(planNodes)
+  })
+
+  test("each issue's rows are clustered on issue_key: one changelog file, one shuffle per table") {
+    // coalescing off, so the 4 shuffle partitions become 4 files and a key
+    // spread over several of them shows
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val before = spark.conf.getOption(coalesce)
+    val plans = scala.collection.concurrent.TrieMap[String, SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        planNodes(qe.executedPlan).collectFirst {
+          case DataWritingCommandExec(cmd: InsertIntoHadoopFsRelationCommand, _) => cmd.outputPath.getName
+        }.foreach(plans.put(_, qe.executedPlan))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val keys = (1 to 16).map(i => s"TEST-$i")
+    val dir = java.nio.file.Files.createTempDirectory("graft-layout").toString
+    spark.conf.set(coalesce, "false")
+    spark.listenerManager.register(listener)
+    try {
+      IssuePipeline.run(raw(keys.map(k => issue(k, "Closed", changelog = walkthroughEvents)): _*),
+        sink = new ParquetSink(dir))
+      GraftBridge.drainListenerBus(spark)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      before.fold(spark.conf.unset(coalesce))(spark.conf.set(coalesce, _))
+    }
+
+    val files = spark.read.parquet(s"$dir/issues_changelog")
+      .select(col("issue_key"), input_file_name().as("file")).distinct()
+    assert(files.select("file").distinct().count() > 1)
+    val filesPerKey = files.groupBy("issue_key").count().as[(String, Long)].collect().toMap
+    assert(filesPerKey == keys.map(_ -> 1L).toMap)
+
+    for (table <- Seq("issues", "issues_changelog")) {
+      val nodes = planNodes(plans(table))
+      val shuffles = nodes.collect { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size == 1, s"$table: ${shuffles.size} shuffles")
+      val on = shuffles.head.outputPartitioning match {
+        case HashPartitioning(exprs, _) => exprs.map { case a: AttributeReference => a.name; case e => e.sql }
+        case other => Seq(other.toString)
+      }
+      assert(on == Seq("issue_key"), table)
+      val below = planNodes(shuffles.head.child).collect { case a: BaseAggregateExec => a.nodeName }
+      assert(below.isEmpty, s"$table: $below below the shuffle")
     }
   }
 

@@ -8,9 +8,10 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.SparkSuite
 import graft.operators.TextAnalysis
 
-/** [[NgramStats]]: hand-computed cases, edge inputs, and equivalence with
-  * the string-exact HOF twin over the test corpus (agreement across the
-  * corpus also rules out xxhash64 collisions in the counts).
+/** [[NgramStats]]: hand-computed cases, edge inputs, and equality with a
+  * driver-side multiset count of n-gram strings over the test corpus
+  * (agreement across the corpus also rules out xxhash64 collisions in the
+  * counts).
   */
 class NgramStatsSpec extends SparkSuite {
 
@@ -42,15 +43,29 @@ class NgramStatsSpec extends SparkSuite {
     assert(evalOne(TextAnalysis.ngramStats(lit(null).cast("string"), 2)) === null)
   }
 
-  test("kernel equals the string-exact HOF form across the corpus") {
+  /** (n_ngrams, top_count, dup_occurrences) from the n-gram STRINGS of
+    * `text`, normalized as Spark's `split(lower(trim(text)), "\\s+")`:
+    * `trim` strips spaces only, and the split keeps empty tokens.
+    */
+  private def multisetStats(text: String, n: Int): Option[(Int, Int, Int)] =
+    Option(text).flatMap { t =>
+      val toks = t.replaceAll("^ +| +$", "").toLowerCase.split("\\s+", -1)
+      val grams = toks.sliding(n).filter(_.length == n).map(_.mkString(" ")).toSeq
+      val counts = grams.groupBy(identity).values.map(_.size)
+      if (grams.isEmpty) None
+      else Some((grams.size, counts.max, counts.filter(_ > 1).sum))
+    }
+
+  test("kernel equals a driver-side multiset count of n-grams across the corpus") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for (n <- Seq(2, 3)) {
-      val diff = docs.select(
-        TextAnalysis.ngramStats(col("text"), n).as("k"),
-        TextAnalysis.ngramStatsHof(col("text"), n).as("h"))
-        .where(not(col("k") <=> col("h")))
-        .count()
-      assert(diff === 0, s"kernel vs HOF mismatch for n=$n")
+      val rows = docs.select(col("text"), TextAnalysis.ngramStats(col("text"), n)).collect()
+      assert(rows.nonEmpty)
+      val got = rows.map(r => Option(r.getStruct(1)).map(s => (s.getInt(0), s.getInt(1), s.getInt(2))))
+      val want = rows.map(r => multisetStats(r.getString(0), n))
+      val diff = got.indices.filter(i => got(i) != want(i))
+      assert(diff.isEmpty, s"n=$n: ${diff.size} mismatches, first ${diff.headOption.map(i => (got(i), want(i)))}")
+      assert(want.exists(_.exists(_._3 > 0)), s"n=$n: no repeated gram anywhere in the corpus")
     }
   }
 
@@ -70,15 +85,11 @@ class NgramStatsSpec extends SparkSuite {
     val prop = Prop.forAll(genDoc, genN) { (toks, n) =>
       val text = toks.mkString(" ")
       val got = NgramStats.compute(UTF8String.fromString(text), n)
-      // split("") yields one empty token, mirroring the kernel/Spark split
-      val effToks = if (toks.isEmpty) Seq("") else toks
-      val grams = effToks.sliding(n).filter(_.size == n).map(_.mkString(" ")).toSeq
-      if (grams.isEmpty) got == null
-      else {
-        val counts = grams.groupBy(identity).values.map(_.size)
-        val (total, top, dup) = (grams.size, counts.max, counts.filter(_ > 1).sum)
-        got != null && got.getInt(0) == total && got.getInt(1) == top && got.getInt(2) == dup &&
-          top <= total && dup <= total && ((dup == 0) == (top == 1))
+      multisetStats(text, n) match {
+        case None => got == null
+        case Some((total, top, dup)) =>
+          got != null && got.getInt(0) == total && got.getInt(1) == top && got.getInt(2) == dup &&
+            top <= total && dup <= total && ((dup == 0) == (top == 1))
       }
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop)
