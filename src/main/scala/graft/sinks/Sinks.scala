@@ -1,6 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
+import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
 /** Output seam ≙ the reference's load stage (etl.py:193-200).
   *
@@ -13,22 +14,41 @@ trait Sink extends Serializable {
   def write(df: DataFrame, table: String): Unit
 }
 
-/** The one parquet encoding of every parquet-writing sink: zstd pages
-  * and INT64 `TIMESTAMP_MICROS` timestamps. The reference stores its
-  * `DateTime64(3, 'UTC')` columns as 8-byte integers in compressed
-  * ClickHouse parts. Spark's defaults are snappy pages and the deprecated
-  * 12-byte INT96 timestamp, which parquet cannot dictionary- or
-  * delta-encode; those columns were 41 % of a backfill export, and the
-  * two changes cut bytes per exported issue by a third. A constant, not
-  * an option.
+/** The one parquet encoding of every parquet-writing sink: zstd pages,
+  * INT64 `TIMESTAMP_MICROS` timestamps, and timestamp columns written
+  * PLAIN. The reference stores its `DateTime64(3, 'UTC')` columns as
+  * 8-byte integers in compressed ClickHouse parts. Spark's defaults are
+  * snappy pages and the deprecated 12-byte INT96 timestamp, which parquet
+  * cannot dictionary- or delta-encode; those columns were 41 % of a
+  * backfill export, and the two changes cut bytes per exported issue by a
+  * third.
   *
-  * Compression is a writer option. The timestamp type is not: Spark
-  * reads it only from the session conf, so the conf is set for the one
-  * write and the caller's value restored (or unset) afterwards, also
-  * when the write throws.
+  * parquet-mr then dictionary-encodes an INT64 timestamp column whenever
+  * its dictionary fits a page. For `issues_changelog.event_time` (~17.5k
+  * distinct instants per file) that is a dictionary of 8-byte values plus
+  * an index per row, which compresses worse under zstd than the plain
+  * 8-byte values: in a seed-1 `etlbench` backfill export the column was
+  * 711,009 B of 2,816,033 B, and 406,107 B written PLAIN (the export
+  * −10.8 %). So every top-level `TimestampType` / `TimestampNTZType`
+  * column gets `parquet.enable.dictionary#<column>` = false; every other
+  * column keeps the dictionary. All of this is constant, not an option.
+  *
+  * Compression and the dictionary are writer options. The timestamp type
+  * is not: Spark reads it only from the session conf, so the conf is set
+  * for the one write and the caller's value restored (or unset)
+  * afterwards, also when the write throws.
   */
 private[sinks] object ParquetEncoding {
   private val TimestampTypeKey = "spark.sql.parquet.outputTimestampType"
+
+  /** One `parquet.enable.dictionary#<column>` = false per top-level
+    * timestamp column of `schema`.
+    */
+  private def plainTimestamps(schema: StructType): Map[String, String] =
+    schema.fields.collect {
+      case f if f.dataType == TimestampType || f.dataType == TimestampNTZType =>
+        s"parquet.enable.dictionary#${f.name}" -> "false"
+    }.toMap
 
   def write(df: DataFrame)(save: DataFrameWriter[Row] => Unit): Unit = {
     val conf = df.sparkSession.conf
@@ -36,7 +56,7 @@ private[sinks] object ParquetEncoding {
     // built-in default and turn an unset key into a set one
     val callers = conf.getAll.get(TimestampTypeKey)
     conf.set(TimestampTypeKey, "TIMESTAMP_MICROS")
-    try save(df.write.option("compression", "zstd"))
+    try save(df.write.option("compression", "zstd").options(plainTimestamps(df.schema)))
     finally callers match {
       case Some(v) => conf.set(TimestampTypeKey, v)
       case None => conf.unset(TimestampTypeKey)
@@ -45,7 +65,7 @@ private[sinks] object ParquetEncoding {
 }
 
 /** Parquet sink for tests/goldens and offline corpora; pages are zstd
-  * and timestamps INT64 micros (see [[ParquetEncoding]]).
+  * and timestamps plain INT64 micros (see [[ParquetEncoding]]).
   */
 final class ParquetSink(baseDir: String) extends Sink {
   def write(df: DataFrame, table: String): Unit =
@@ -65,7 +85,7 @@ final class ParquetSink(baseDir: String) extends Sink {
   * Both sides must agree on bucket COUNT and key (the Spark bucketing
   * contract); `spark.sql.sources.bucketing.enabled` (default true) and
   * AQE leave bucketed scans un-coalesced. Files are encoded like
-  * [[ParquetSink]]'s: zstd pages, INT64 micros timestamps.
+  * [[ParquetSink]]'s: zstd pages, plain INT64 micros timestamps.
   */
 final class BucketedTableSink(buckets: Int, keys: Seq[String]) extends Sink {
   def write(df: DataFrame, table: String): Unit =

@@ -223,6 +223,26 @@ object IssueTransform {
       lit(""))
   }
 
+  /** Whether `stringifyVariant(v) === ""`, without computing the string:
+    * the same coalesce chain, each arm asking only whether its value is
+    * empty. A string is empty only as `""` (a parsed datetime and the
+    * too-long marker never are), a number never is, and lowering an email
+    * keeps it empty or not. Never null.
+    */
+  private[graft] def isEmptyVariant(v: Column): Column = {
+    val s = v.getField("s")
+    val r = v.getField("ref")
+    val firstRef = coalesce(r.getField("key"), r.getField("email"), r.getField("name"), r.getField("id"))
+    val list = v.getField("list")
+    coalesce(
+      when(s.isNotNull, s === ""),
+      when(v.getField("n").isNotNull, lit(false)),
+      when(r.isNotNull, firstRef === ""),
+      when(list.isNotNull, array_join(list, ", ") === ""),
+      v.getField("json") === "",
+      lit(true))
+  }
+
   /** S3 comments lookup ≙ `get_comments` (services/tracker.py:46-48).
     * The reference fetches one issue's comments over HTTP and returns the
     * API objects untransformed; the engine-side analog is the flat
@@ -245,6 +265,14 @@ object IssueTransform {
   /** Changelog rows ≙ issues_changelog DDL (models/issue.py:126-160):
     * every event × changed field, P8-filtered (non-null field, at least one
     * non-empty side), values stringified per F9.
+    *
+    * P8 runs on each event's raw field structs, inside `filter` before the
+    * explode, through [[isEmptyVariant]]. A `where` on the stringified
+    * columns would be pushed below the projection with both
+    * `stringifyVariant`s inlined into it, a row loop of ~11.9k bytes of
+    * bytecode. HotSpot does not JIT-compile a method over 8,000 bytes, so
+    * that loop would stay interpreted (IssuePipelineSpec guards the limit
+    * on all three tables' writes).
     */
   def changelog(raw: DataFrame, version: Column = current_timestamp()): DataFrame =
     raw
@@ -258,16 +286,16 @@ object IssueTransform {
         col("ev.type").as("event_type"),
         col("ev.transport").as("transport"),
         coalesce(low(col("ev.updatedBy.email")), low(col("ev.updatedBy.name")), lit("")).as("actor"),
-        explode(col("ev.fields")).as("change"))
-      .select(
-        col("issue_key"), col("queue"), col("event_time"), col("event_type"),
-        col("transport"), col("actor"),
-        coalesce(col("change.field.name"), col("change.field.id")).as("changed_field"),
-        stringifyVariant(col("change.from")).as("changed_from"),
-        stringifyVariant(col("change.to")).as("changed_to"))
-      .where(col("changed_field").isNotNull && (col("changed_from") =!= "" || col("changed_to") =!= ""))
+        explode(filter(col("ev.fields"), f =>
+          changedField(f).isNotNull &&
+            !(isEmptyVariant(f.getField("from")) && isEmptyVariant(f.getField("to"))))).as("change"))
       .select(
         version.as("version"), col("event_time"), col("issue_key"), col("queue"),
-        col("event_type"), col("transport"), col("actor"), col("changed_field"),
-        col("changed_from"), col("changed_to"))
+        col("event_type"), col("transport"), col("actor"),
+        changedField(col("change")).as("changed_field"),
+        stringifyVariant(col("change.from")).as("changed_from"),
+        stringifyVariant(col("change.to")).as("changed_to"))
+
+  private def changedField(change: Column): Column =
+    coalesce(change.getField("field").getField("name"), change.getField("field").getField("id"))
 }

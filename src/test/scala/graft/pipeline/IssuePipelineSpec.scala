@@ -6,14 +6,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.debug.codegenStringSeq
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftBridge
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSuite
@@ -190,6 +192,31 @@ class IssuePipelineSpec extends SparkSuite {
     // null-`to` variant normalizes to "" (kept — `from` side is non-empty):
     assert(ch.contains(("Status start time", "2024-01-09T12:00:00.000", "dev@example.com", "IssueWorkflow")))
     assert(ch.contains(("Status start time", "", "dev@example.com", "IssueWorkflow")))
+  }
+
+  test("isEmptyVariant is stringifyVariant(v) === \"\" over every variant kind") {
+    val vs = Seq(
+      null, variant(),
+      variant(s = ""), variant(s = "x"), variant(s = t("11:00")), variant(s = "x" * 150),
+      variant(s = "", n = 1.0), variant(n = 0.0), variant(n = 2.5), variant(n = -3.0),
+      variant(r = refv()), variant(r = refv(key = "")), variant(r = refv(key = "K-1", email = "")),
+      variant(r = refv(email = "")), variant(r = refv(email = "A@x.com")),
+      variant(r = refv(email = "", name = "N")), variant(r = refv(name = "")),
+      variant(r = refv(id = "")), variant(r = refv(id = "7")),
+      variant(r = refv(), list = Seq("a")), variant(r = refv(), json = ""),
+      variant(list = Seq.empty), variant(list = Seq(null)), variant(list = Seq("")),
+      variant(list = Seq("", "")), variant(list = Seq(null, "")), variant(list = Seq("a")),
+      variant(list = Seq(""), json = "{}"),
+      variant(json = ""), variant(json = "{}"))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(vs.map(Row(_))),
+      StructType(Seq(StructField("v", Schemas.variant))))
+    val pairs = df.select(
+      IssueTransform.isEmptyVariant(col("v")),
+      IssueTransform.stringifyVariant(col("v")) === "").collect()
+      .map(r => (r.getAs[java.lang.Boolean](0), r.getAs[java.lang.Boolean](1)))
+    assert(pairs.length == vs.size)
+    pairs.zip(vs).foreach { case ((empty, expected), v) => assert(empty == expected, String.valueOf(v)) }
+    assert(pairs.map(_._2).toSet == Set(true, false))
   }
 
   test("typed Dataset view: compile-time field access over the three tables") {
@@ -395,11 +422,11 @@ class IssuePipelineSpec extends SparkSuite {
     case other => other.children.flatMap(planNodes)
   })
 
-  test("each issue's rows are clustered on issue_key: one changelog file, one shuffle per table") {
-    // coalescing off, so the 4 shuffle partitions become 4 files and a key
-    // spread over several of them shows
-    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
-    val before = spark.conf.getOption(coalesce)
+  /** The executed plan of each file write `f` runs, by output directory
+    * name. Listener events arrive asynchronously, so the bus is drained
+    * before the plans are read.
+    */
+  private def writePlans(f: => Unit): Map[String, SparkPlan] = {
     val plans = scala.collection.concurrent.TrieMap[String, SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -408,18 +435,26 @@ class IssuePipelineSpec extends SparkSuite {
         }.foreach(plans.put(_, qe.executedPlan))
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      GraftBridge.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    plans.toMap
+  }
+
+  test("each issue's rows are clustered on issue_key: one changelog file, one shuffle per table") {
+    // coalescing off, so the 4 shuffle partitions become 4 files and a key
+    // spread over several of them shows
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val before = spark.conf.getOption(coalesce)
     val keys = (1 to 16).map(i => s"TEST-$i")
     val dir = java.nio.file.Files.createTempDirectory("graft-layout").toString
     spark.conf.set(coalesce, "false")
-    spark.listenerManager.register(listener)
-    try {
-      IssuePipeline.run(raw(keys.map(k => issue(k, "Closed", changelog = walkthroughEvents)): _*),
-        sink = new ParquetSink(dir))
-      GraftBridge.drainListenerBus(spark)
-    } finally {
-      spark.listenerManager.unregister(listener)
-      before.fold(spark.conf.unset(coalesce))(spark.conf.set(coalesce, _))
-    }
+    val plans =
+      try writePlans(IssuePipeline.run(raw(keys.map(k => issue(k, "Closed", changelog = walkthroughEvents)): _*),
+        sink = new ParquetSink(dir)))
+      finally before.fold(spark.conf.unset(coalesce))(spark.conf.set(coalesce, _))
 
     val files = spark.read.parquet(s"$dir/issues_changelog")
       .select(col("issue_key"), input_file_name().as("file")).distinct()
@@ -438,6 +473,21 @@ class IssuePipelineSpec extends SparkSuite {
       assert(on == Seq("issue_key"), table)
       val below = planNodes(shuffles.head.child).collect { case a: BaseAggregateExec => a.nodeName }
       assert(below.isEmpty, s"$table: $below below the shuffle")
+    }
+  }
+
+  test("every generated method of the three writes fits HotSpot's 8,000-byte JIT limit") {
+    // -XX:HugeMethodLimit: a larger method is never JIT-compiled, so a
+    // stage's per-row loop over it runs in the bytecode interpreter
+    val hugeMethodLimit = 8000
+    val dir = java.nio.file.Files.createTempDirectory("graft-codegen").toString
+    val plans = writePlans(IssuePipeline.run(walkthrough, sink = new ParquetSink(dir)))
+    assert(plans.keySet == Set("issues", "issue_metrics", "issues_changelog"))
+    for ((table, plan) <- plans) {
+      val sizes = planNodes(plan).collect { case w: WholeStageCodegenExec => w }.distinct
+        .flatMap(codegenStringSeq(_)).map(_._3.maxMethodCodeSize)
+      assert(sizes.nonEmpty, table)
+      assert(sizes.forall(_ <= hugeMethodLimit), s"$table: $sizes")
     }
   }
 

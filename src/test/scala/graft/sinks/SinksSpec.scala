@@ -6,13 +6,14 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.Encoding
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+import org.apache.spark.sql.functions.{col, explode, lit, raise_error, sequence, when}
 
 import graft.SparkSuite
 
@@ -132,14 +133,21 @@ class SinksSpec extends SparkSuite {
     ("K-3", Some(ts("2024-03-01 12:30:00.5")), None, 3),
     ("K-4", None, None, 4)).toDF("issue_key", "updated_at", "closed_at", "n").repartition(2)
 
+  // every row of `stamped` 50 times: few distinct values per column, so
+  // parquet-mr would dictionary-encode each of them unless told otherwise
+  private lazy val repeated: DataFrame = stamped
+    .withColumn("copy", explode(sequence(lit(1), lit(50)))).drop("copy").repartition(2)
+
   private def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Assert every data file is zstd throughout and stores each timestamp
-    * column as INT64 TIMESTAMP(MICROS); returns the timestamp column names.
+  /** Assert every data file is zstd throughout, stores each timestamp
+    * column as INT64 TIMESTAMP(MICROS) without a dictionary, and keeps the
+    * dictionary of `issue_key`; returns the timestamp column names.
     */
   private def assertEncoding(files: Seq[String]): Set[String] = {
     assert(files.nonEmpty)
+    val dictionary = Set(Encoding.PLAIN_DICTIONARY, Encoding.RLE_DICTIONARY)
     files.flatMap { f =>
       val reader = ParquetFileReader.open(
         HadoopInputFile.fromPath(new Path(f), spark.sparkContext.hadoopConfiguration))
@@ -150,12 +158,22 @@ class SinksSpec extends SparkSuite {
         assert(chunks.forall(_.getCodec == CompressionCodecName.ZSTD), f)
         val prims = footer.getFileMetaData.getSchema.getColumns.asScala.map(_.getPrimitiveType)
         assert(!prims.exists(_.getPrimitiveTypeName == PrimitiveTypeName.INT96), f)
-        prims.collect { p => p.getLogicalTypeAnnotation match {
+        val stamps = prims.collect { p => p.getLogicalTypeAnnotation match {
           case t: TimestampLogicalTypeAnnotation =>
             assert(p.getPrimitiveTypeName == PrimitiveTypeName.INT64, f)
             assert(t.getUnit == TimeUnit.MICROS, f)
             p.getName
         } }
+        for (c <- chunks) {
+          val name = c.getPath.toDotString
+          val encodings = c.getEncodings.asScala.toSet
+          if (stamps.contains(name)) {
+            assert(!c.hasDictionaryPage, s"$f: $name")
+            assert(encodings.intersect(dictionary).isEmpty, s"$f: $name $encodings")
+          }
+          if (name == "issue_key") assert(c.hasDictionaryPage, s"$f: $name $encodings")
+        }
+        stamps
       } finally reader.close()
     }.toSet
   }
@@ -169,14 +187,14 @@ class SinksSpec extends SparkSuite {
 
   test("ParquetSink writes zstd pages and INT64 TIMESTAMP_MICROS in every data file") {
     val dir = tempDir("graft-enc")
-    new ParquetSink(dir).write(stamped, "t")
+    new ParquetSink(dir).write(repeated, "t")
     val files = spark.read.parquet(s"$dir/t").inputFiles.toSeq
     assert(assertEncoding(files) == Set("updated_at", "closed_at"))
   }
 
   test("BucketedTableSink writes the same encoding") {
     try {
-      new BucketedTableSink(buckets = 2, keys = Seq("issue_key")).write(stamped, "sink_spec_stamped")
+      new BucketedTableSink(buckets = 2, keys = Seq("issue_key")).write(repeated, "sink_spec_stamped")
       val files = spark.table("sink_spec_stamped").inputFiles.toSeq
       assert(assertEncoding(files) == Set("updated_at", "closed_at"))
     } finally spark.sql("DROP TABLE IF EXISTS sink_spec_stamped")
