@@ -66,21 +66,7 @@ object Bench {
       require(in != null, "bench-reference.json is missing from the classpath")
       try parseReference(new String(in.readAllBytes(), "UTF-8")) finally in.close()
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE may re-coalesce cached-plan output partitioning (see the
-      // Verify.scala comment): persist()-cut intermediates size their
-      // partition count to their data instead of inheriting the full
-      // shuffle.partitions fan-out — the scale-adaptive partitioning the
-      // optimization guide §2 prescribes, measured 3× on the perceptron
-      // epoch loop at sf0.1.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen warmup so the first measured query doesn't absorb
     // several seconds of one-time initialization: one cheap query per

@@ -70,13 +70,7 @@ object PipelineMain {
     val Seq(rawPath, outDir) = positional.take(2)
     val env = flagParts.get("--env-file").map(EnvFile.overlay(_)).getOrElse(sys.env)
 
-    val cpus = env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus(env))
     spark.sparkContext.setLogLevel("WARN")
 
     val sink = if (outDir == "console") new ConsoleSink() else new ParquetSink(outDir)

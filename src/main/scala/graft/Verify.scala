@@ -1,34 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS), which Spark 4 refuses by
-      // default; read as long nanos and truncate to micros in the reader
-      // (graft.sources.Tables.events) — the same truncation DuckDB applies.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Let AQE coalesce the output partitioning of CACHED plans (off by
-      // default): every operator's persist()-cut intermediate otherwise
-      // keeps the full shuffle.partitions fan-out however tiny the data,
-      // and each downstream pass pays per-task overhead on mostly-empty
-      // partitions (r14 measurement: the perceptron's cached feature
-      // table at 32 fixed partitions cost 0.45 s PER EPOCH of pure task
-      // overhead; AQE-coalesced it is 0.15 s). Data-adaptive by
-      // construction — big intermediates keep many partitions, small
-      // ones shrink — and results stay partitioning-independent (the
-      // engine's exactness discipline; the full oracle gate re-proves
-      // it). Same flag in Bench keeps the two surfaces consistent.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the dump for isolated oracle

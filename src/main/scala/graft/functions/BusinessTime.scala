@@ -1,9 +1,6 @@
 package graft.functions
 
 import java.time.{DayOfWeek, LocalDate, LocalDateTime, LocalTime, MonthDay}
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.udf
 
 /** Business-hours duration between two timestamps.
   *
@@ -17,9 +14,9 @@ import org.apache.spark.sql.functions.udf
   * Nov 4) are generated for any year — matching the reference's
   * `holidays.RU()` rule set for the fixed-date holidays it uses.
   *
-  * This is the engine's one genuine scalar UDF (SURVEY.md §4: custom code
-  * concentrates in the business-calendar function); everything else is
-  * native column expressions.
+  * Spark evaluates it through the [[graft.plans.BusinessSeconds]]
+  * expression, which calls [[businessSeconds]] on the micros of its two
+  * timestamp operands.
   */
 object BusinessTime extends Serializable {
 
@@ -70,19 +67,4 @@ object BusinessTime extends Serializable {
     }
     total
   }
-
-  /** UDF over two TimestampType columns (interpreted as naive UTC wall
-    * time, matching the reference which computes on UTC-converted naive
-    * datetimes). Returns whole seconds, never null (0 on null input).
-    */
-  def businessSecondsUdf(cal: Calendar = Calendar()): UserDefinedFunction =
-    udf((s: java.time.Instant, e: java.time.Instant) =>
-      if (s == null || e == null) 0L
-      else businessSeconds(
-        LocalDateTime.ofInstant(s, java.time.ZoneOffset.UTC),
-        LocalDateTime.ofInstant(e, java.time.ZoneOffset.UTC), cal))
-
-  /** Convenience column wrapper with the default calendar. */
-  def businessSecondsCol(start: Column, end: Column): Column =
-    businessSecondsUdf()(start, end)
 }

@@ -96,7 +96,7 @@ object AnnGraph {
     * that keeps the average bucket/group WIDTH constant as the corpus
     * grows. This sizing is load-bearing at scale: FIXED bit-counts make
     * widths grow linearly with N and the candidate equi-joins
-    * quadratic (measured: ScaleSmoke 10× ratio 14.3 with fixed 5-bit
+    * quadratic (measured: 10× corpus ratio 14.3 with fixed 5-bit
     * groups vs near-linear once sized).
     */
   private def bitsFor(n: Long, targetWidth: Int): Int =

@@ -688,8 +688,8 @@ object CorpusSelection {
     * doc longer than `capacity` gets its own overfull singleton bin
     * (truncation is a downstream concern). Runs as the native
     * [[graft.plans.BestFitPack]] kernel — one codegen'd primitive loop
-    * per shard; the composed HOF fold it replaced ([[bestFitStateHof]],
-    * kept for the equivalence spec) interpreted O(bins) boxed lambda
+    * per shard; the composed HOF fold it replaced (the equivalence
+    * oracle in CorpusSelectionSpec) interpreted O(bins) boxed lambda
     * evals per doc plus an O(docs²) state concat and owned the whole
     * query at sf0.1 (r14 measurement: pack_bestfit 14.8 s → sub-second).
     * Integer arithmetic, bit-identical placement either way.
@@ -698,30 +698,6 @@ object CorpusSelection {
     import org.apache.spark.sql.graft.{ColumnBridge => B}
     B.column(graft.plans.BestFitPack(
       B.expression(transform(docsArr, d => d.getField("len"))), capacity))
-  }
-
-  /** The composed-HOF reference form of [[bestFitState]] — the
-    * equivalence oracle for the native kernel (CorpusSelectionSpec
-    * asserts bit-identical output on random and null-edge corpora).
-    */
-  private[operators] def bestFitStateHof(docsArr: Column, capacity: Long): Column = {
-    val st0 = struct(
-      array().cast("array<bigint>").as("loads"),
-      array().cast("array<int>").as("bins"))
-    aggregate(docsArr, st0, (st, d) => {
-      val loads = st.getField("loads")
-      val len = d.getField("len")
-      // fittest bin that still fits: max by (load, then lowest index)
-      val best = array_max(transform(loads, (l, i0) =>
-        when(l + len <= capacity, struct(l.as("l"), (-(i0 + lit(1))).as("ni")))))
-      val idx = -best.getField("ni")
-      val newLoads = when(best.isNull, concat(loads, array(len)))
-        .otherwise(transform(loads, (l, i0) =>
-          when(i0 + lit(1) === idx, l + len).otherwise(l)))
-      val bin = coalesce(idx, size(loads) + 1).cast("int")
-      struct(newLoads.as("loads"),
-        concat(st.getField("bins"), array(bin)).as("bins"))
-    })
   }
 
   /** Per-shard doc arrays in placement order: length-desc (best-fit-

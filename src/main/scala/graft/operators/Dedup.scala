@@ -479,7 +479,7 @@ object Dedup {
     * minhashes each. Docs sharing any band key are candidates. The band
     * keys come from one [[graft.plans.BandHashes]] kernel call
     * (bit-identical to the composed `hash(slice(..))` form on non-null
-    * signatures, kept as [[lshBucketsComposed]] for equivalence tests —
+    * signatures, asserted in DedupSpec —
     * at bands=32 the composed column trees dominated the plan's codegen
     * size). Null signatures emit NO buckets; the composed form would
     * bucket them all together under `hash(null)` = the seed, making
@@ -491,15 +491,6 @@ object Dedup {
       col(idCol),
       posexplode(ExpressionUtils.column(
         BandHashes(ExpressionUtils.expression(col("signature")), bands, rows))).as(Seq("band", "bucket")))
-
-  /** Reference composed form of [[lshBuckets]] (kept for tests). */
-  def lshBucketsComposed(sigs: DataFrame, idCol: String, bands: Int, rows: Int): DataFrame = {
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"), hash(slice(col("signature"), b * rows + 1, rows)).as("bucket"))
-    }
-    sigs.select(col(idCol), explode(array(bandCols: _*)).as("bk"))
-      .select(col(idCol), col("bk.band"), col("bk.bucket"))
-  }
 
   /** All ordered pairs (a, b), a < b, of a pre-sorted array. Safe on
     * empty and singleton arrays (yields an empty array), so callers can

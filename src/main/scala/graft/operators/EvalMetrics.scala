@@ -124,7 +124,7 @@ object EvalMetrics {
         sum(col("_conf")).as("_sc"))
       .withColumn("_gap_num", abs(col("_c") * grid - col("_sc")))
       // the totals branch reuses the bins-domain aggregate — cut it or
-      // the corpus is scanned twice (PlanAudit caught the double scan)
+      // the corpus is scanned twice (the condensed plan showed it)
       .materialized
     val tot = b.agg(sum(col("n")).as("_tn"), sum(col("_gap_num")).as("_tg"))
     b.crossJoin(broadcast(tot))

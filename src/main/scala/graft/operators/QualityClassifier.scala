@@ -35,19 +35,13 @@ object QualityClassifier {
 
   /** First 24 bits of md5 as a long in [0, 2^24) — the
     * [[graft.plans.Md5Prefix]] kernel (reads the coin off the raw
-    * digest bytes; the composed hex-encode → substring → base-16-parse
-    * chain is kept as [[md24Hof]], the spec-asserted reference).
+    * digest bytes; equal to the composed hex-encode → substring →
+    * base-16-parse chain every oracle replays, QualityClassifierSpec).
     */
   private[operators] def md24(c: Column): Column = {
     import org.apache.spark.sql.graft.{ColumnBridge => B}
     B.column(graft.plans.Md5Prefix(B.expression(c), 6))
   }
-
-  /** The composed reference form of [[md24]] — the portable definition
-    * every oracle replays (equivalence oracle for the kernel).
-    */
-  private[operators] def md24Hof(c: Column): Column =
-    conv(substring(md5(c), 1, 6), 16, 10).cast("long")
 
   /** The hash-derived weight table: (bucket, w_fp). Deterministic in
     * `buckets` alone; a production model swaps this for
@@ -247,7 +241,7 @@ object QualityClassifier {
   /** Document score Σ cnt·w(bucket) against a driver weight array —
     * the native [[graft.plans.FeatureDot]] kernel (weights ride as a
     * codegen reference object). The composed HOF form it replaced
-    * ([[scoreAgainstHof]], kept as the equivalence oracle) interpreted
+    * (the equivalence oracle in QualityClassifierSpec) interpreted
     * one boxed lambda eval per feature per doc per EPOCH — the
     * aggregate HOF is CodegenFallback — and shipped the weights as a
     * `buckets`+1-element literal through every epoch plan's analysis.
@@ -257,15 +251,6 @@ object QualityClassifier {
   private[operators] def scoreAgainst(w: Array[Long]): Column = {
     import org.apache.spark.sql.graft.{ColumnBridge => B}
     B.column(graft.plans.FeatureDot(B.expression(col("fs")), w.toSeq))
-  }
-
-  /** The composed-HOF reference form of [[scoreAgainst]] — the
-    * equivalence oracle for the native kernel.
-    */
-  private[operators] def scoreAgainstHof(w: Array[Long]): Column = {
-    val wLit = typedLit(w.toSeq)
-    aggregate(col("fs"), lit(0L),
-      (acc, f) => acc + f.getField("cnt") * element_at(wLit, f.getField("bucket") + 1))
   }
 
   /** The epoch loop as a DRIVER FOLD over the (already-cut) per-doc

@@ -20,20 +20,14 @@ object Similarity {
 
   /** Σ aᵢ·bᵢ over two array<float|double> columns, computed in double —
     * a native codegen expression ([[graft.plans.DotProduct]]) with the
-    * identical left-fold arithmetic as [[dotHof]], the interpreted
-    * higher-order-function form it replaced (HOFs are CodegenFallback;
-    * the interpretation overhead dominated every scoring operator).
+    * identical left-fold arithmetic as the interpreted higher-order-function
+    * form it replaced (HOFs are CodegenFallback; the interpretation
+    * overhead dominated every scoring operator).
     */
   def dot(a: Column, b: Column): Column =
     ExpressionUtils.column(DotProduct(
       ExpressionUtils.expression(a.cast("array<double>")),
       ExpressionUtils.expression(b.cast("array<double>"))))
-
-  /** Reference HOF form of [[dot]] (kept for equivalence tests). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a.cast("array<double>"), b.cast("array<double>"), (x, y) => x * y),
-      lit(0.0), (acc, x) => acc + x)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -128,23 +122,13 @@ object Similarity {
 
   /** Index of the nearest centroid (L2) — native codegen argmin
     * ([[graft.plans.NearestCentroid]]); ties break to the higher cell id,
-    * matching [[nearestCellHof]], the composed struct-max form it
-    * replaced (equivalence asserted in SimilaritySpec).
+    * matching the composed struct-max form it replaced (equivalence
+    * asserted in SimilaritySpec).
     */
   private[operators] def nearestCell(vec: Column, centroids: Array[Array[Double]]): Column =
     ExpressionUtils.column(NearestCentroid(
       ExpressionUtils.expression(vec.cast("array<double>")),
       centroids.map(_.toSeq).toSeq))
-
-  /** Reference composed form of [[nearestCell]] (kept for tests). */
-  private[operators] def nearestCellHof(vec: Column, centroids: Array[Array[Double]]): Column =
-    array_max(array(centroids.zipWithIndex.map { case (c, j) =>
-      val lit_ = typedLit(c.toSeq)
-      val d2 = aggregate(
-        zip_with(vec.cast("array<double>"), lit_, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, x) => acc + x)
-      struct((-d2).as("nd"), lit(j).as("cell"))
-    }: _*)).getField("cell")
 
   /** The `nprobe` nearest cells of a query vector (ascending L2). */
   private def probeCells(vec: Column, centroids: Array[Array[Double]], nprobe: Int): Column = {
@@ -583,18 +567,12 @@ object Similarity {
   /** Sign-of-projection LSH bucket id (one long from `planes` bits) — a
     * single codegen'd planes×dim loop ([[graft.plans.HyperplaneBucket]])
     * instead of `planes` interpreted per-plane dot-folds; bit-for-bit the
-    * same bucket ids as [[lshBucketHof]] (asserted in SimilaritySpec).
+    * same bucket ids as the composed form (asserted in SimilaritySpec).
     */
   def lshBucket(vec: Column, dim: Int, planes: Int = 12, seed: Long = 42L): Column =
     ExpressionUtils.column(HyperplaneBucket(
       ExpressionUtils.expression(vec.cast("array<double>")),
       hyperplanes(dim, planes, seed).map(_.toSeq)))
-
-  /** Reference composed form of [[lshBucket]] (kept for equivalence tests). */
-  def lshBucketHof(vec: Column, dim: Int, planes: Int = 12, seed: Long = 42L): Column =
-    hyperplanes(dim, planes, seed).zipWithIndex.map { case (p, i) =>
-      when(dotHof(vec, typedLit(p.toSeq)) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /** Multi-probe expansion: each row lands in its own bucket plus the
     * first `probes` buckets at Hamming distance 1 (shared by lshTopK and

@@ -50,7 +50,7 @@ object UnigramLm {
       .groupBy(col("word")).agg(count(lit(1)).as("wcnt"))
 
   /** All (start, len, piece) substrings of `word` up to `pieceLen`. */
-  private def piecesOf(word: Column, n: Column, pieceLen: Int): Column =
+  private[operators] def piecesOf(word: Column, n: Column, pieceLen: Int): Column =
     flatten(transform(sequence(lit(1), n), i =>
       transform(sequence(lit(1), least(lit(pieceLen), n - i + 1)), l =>
         struct(i.as("i"), l.as("l"), word.substr(i, l).as("piece")))))
@@ -89,8 +89,8 @@ object UnigramLm {
     * to a driver map (bounded: chars + the multi budget; the k-means
     * centroid discipline) and lattice edges are substring LOOKUPS, so
     * each EM round is ONE projection over the word table. The composed
-    * HOF form it replaced ([[viterbiSegHof]], kept as the equivalence
-    * oracle) interpreted O(n²·pieceLen) boxed lambda evals per word
+    * HOF form it replaced (the equivalence oracle in UnigramLmSpec)
+    * interpreted O(n²·pieceLen) boxed lambda evals per word
     * (aggregate/filter/array_sort are CodegenFallback) AND materialized
     * the lattice as data — substring explode, broadcast cost join,
     * collect_list re-group: two extra exchanges of the ≈len·pieceLen-
@@ -110,74 +110,6 @@ object UnigramLm {
     val seg = B.column(graft.plans.ViterbiSegVocab(
       B.expression(col("word")), graft.plans.VocabHandle(costSeq), pieceLen))
     words.select(col("word"), col("wcnt"), seg.as("seg"))
-      .where(col("seg").isNotNull)
-  }
-
-  /** The per-word lattice edge table the composed DP form consumes. */
-  private def viterbiEdges(words: DataFrame, costs: DataFrame,
-                           pieceLen: Int): DataFrame = words
-    .select(col("word"), col("wcnt"), length(col("word")).as("n"),
-      explode(piecesOf(col("word"), length(col("word")), pieceLen)).as("p"))
-    .select(col("word"), col("wcnt"), col("n"),
-      col("p.i").as("i"), col("p.l").as("l"), col("p.piece").as("piece"))
-    .join(broadcast(costs), Seq("piece"))
-    .groupBy(col("word"), col("wcnt"), col("n"))
-    .agg(collect_list(struct(col("i"), col("l"), col("cfp"))).as("edges"))
-
-  /** The composed-HOF reference form of [[viterbiSeg]] — the
-    * equivalence oracle for the native kernel (UnigramLmSpec asserts
-    * bit-identical segmentations, incl. the unreachable-word null).
-    * Both folds live in ONE aggregate expression — the forward DP
-    * builds the cost array and the backward walk runs in its `finish`
-    * lambda, where the array is a bound VALUE (two projections would
-    * let CollapseProject inline the forward fold into every backward
-    * element_at — quadratic re-evaluation).
-    */
-  private[operators] def viterbiSegHof(words: DataFrame, costs: DataFrame,
-                                       pieceLen: Int): DataFrame = {
-    val edges = viterbiEdges(words, costs, pieceLen)
-    // forward DP (cst[j+1] = cost of positions 0..j, 1-based
-    // element_at), then the backward walk: at pos, among edges ending
-    // there pick min (cost[i-1] + cfp), tie → longest piece (struct
-    // sort (k, -l))
-    // UNREACHABLE positions (a word the vocab cannot tile — e.g. an
-    // out-of-vocabulary character under a persisted artifact) carry a
-    // NULL forward cost: the filtered edge set is empty there and
-    // array_min(empty) = null (and null priors propagate — array_min
-    // skips nulls, so a position is non-null iff genuinely reachable).
-    // The backward walk therefore (a) only considers candidates with a
-    // non-null prior (from a reachable end every visited position has
-    // one) and (b) never starts at all when the END is unreachable —
-    // the word's seg is NULL, which callers filter out (the exact spot
-    // a production encoder adds byte fallback). Without the guard the
-    // walk would evaluate element_at(array_sort(empty), 1) — an ANSI
-    // INVALID_ARRAY_INDEX crash.
-    val st0 = struct(col("n").as("pos"), lit("").as("seg"))
-    val seg = aggregate(
-      sequence(lit(1), col("n")), array(lit(0L)),
-      (acc, j) =>
-        concat(acc, array(array_min(transform(
-          filter(col("edges"), e =>
-            e.getField("i") + e.getField("l") - 1 === j),
-          e => element_at(acc, e.getField("i")) + e.getField("cfp"))))),
-      cst => when(element_at(cst, col("n") + 1).isNull, lit(null).cast("string"))
-        .otherwise(aggregate(sequence(lit(1), col("n")), st0, (st, _) => {
-          val pos = st.getField("pos")
-          val best = element_at(array_sort(transform(
-            filter(col("edges"), e =>
-              e.getField("i") + e.getField("l") - 1 === pos &&
-                element_at(cst, e.getField("i")).isNotNull),
-            e => struct(
-              (element_at(cst, e.getField("i")) + e.getField("cfp")).as("k"),
-              (-e.getField("l")).as("nl"),
-              e.getField("i").as("i"), e.getField("l").as("l")))), 1)
-          when(pos <= 0, st).otherwise(struct(
-            (best.getField("i") - 1).as("pos"),
-            concat(col("word").substr(best.getField("i"), best.getField("l")),
-              when(st.getField("seg") === "", lit(""))
-                .otherwise(concat(lit(" "), st.getField("seg")))).as("seg")))
-        }).getField("seg")))
-    edges.select(col("word"), col("wcnt"), seg.as("seg"))
       .where(col("seg").isNotNull)
   }
 

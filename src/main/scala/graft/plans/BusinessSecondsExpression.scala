@@ -9,26 +9,21 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
 import graft.functions.BusinessTime
 
 /** Native Catalyst expression for business-seconds between two timestamps
-  * (the engine's one piece of custom scalar logic, SURVEY.md §4 F5).
+  * (the engine's one piece of custom scalar logic, SURVEY.md §4 F5) under
+  * `calendar`: the pipeline's `busdays_duration` passes the configured
+  * calendar, and the `business_seconds` SQL function uses the default one.
   *
-  * Why an `Expression` and not the UDF in [[BusinessTime.businessSecondsUdf]]:
-  * a ScalaUDF node boxes both timestamps into `java.time.Instant`, breaks
-  * the whole-stage-codegen span it sits in, and blocks null-intolerant
-  * optimizations. This expression stays inside codegen — `doGenCode` emits
-  * a call on the primitive micros longs. Inputs must already be
+  * An `Expression`, not a UDF: a ScalaUDF node boxes both timestamps into
+  * `java.time.Instant`, breaks the whole-stage-codegen span it sits in,
+  * and blocks null-intolerant optimizations. This expression stays inside
+  * codegen — `doGenCode` emits a call on the primitive micros longs, with
+  * the calendar as a reference object. Inputs must already be
   * TimestampType (checkInputDataTypes rejects others; no implicit casts).
   *
-  * Null semantics: standard SQL (null in → null out), unlike the UDF,
-  * which coerces null inputs to 0 — callers that relied on the UDF's 0
-  * must coalesce explicitly.
-  *
-  * Calendar: this SQL function is pinned to the DEFAULT calendar. A
-  * deployment injecting a custom calendar (year-specific holidays,
-  * different hours) must use [[BusinessTime.businessSecondsUdf]], which
-  * takes the calendar as a parameter — mixing the two paths with a
-  * non-default calendar silently diverges.
+  * Null semantics: standard SQL (null in → null out).
   */
-final case class BusinessSeconds(left: Expression, right: Expression)
+final case class BusinessSeconds(left: Expression, right: Expression,
+                                  calendar: BusinessTime.Calendar = BusinessTime.Calendar())
     extends BinaryExpression {
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
@@ -42,26 +37,30 @@ final case class BusinessSeconds(left: Expression, right: Expression)
   override def nullable: Boolean = left.nullable || right.nullable
 
   override protected def nullSafeEval(startMicros: Any, endMicros: Any): Any =
-    BusinessSeconds.evalMicros(startMicros.asInstanceOf[Long], endMicros.asInstanceOf[Long])
+    BusinessSeconds.evalMicros(startMicros.asInstanceOf[Long], endMicros.asInstanceOf[Long], calendar)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cal = ctx.addReferenceObj("calendar", calendar)
     defineCodeGen(ctx, ev, (s, e) =>
-      s"graft.plans.BusinessSeconds.evalMicros($s, $e)")
+      s"graft.plans.BusinessSeconds.evalMicros($s, $e, $cal)")
+  }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "business_seconds"
+
+  // plans print the two operands, not the calendar's holiday sets
+  override protected def flatArguments: Iterator[Any] = Iterator(left, right)
 }
 
 object BusinessSeconds {
-  private val calendar = BusinessTime.Calendar()
 
   /** Static entry the generated code calls: micros-since-epoch → business
-    * seconds under the default calendar (naive UTC wall time, matching the
+    * seconds under `calendar` (naive UTC wall time, matching the
     * reference's UTC-converted naive datetimes).
     */
-  def evalMicros(startMicros: Long, endMicros: Long): Long = {
+  def evalMicros(startMicros: Long, endMicros: Long, calendar: BusinessTime.Calendar): Long = {
     val s = LocalDateTime.ofEpochSecond(Math.floorDiv(startMicros, 1000000L),
       (Math.floorMod(startMicros, 1000000L) * 1000L).toInt, ZoneOffset.UTC)
     val e = LocalDateTime.ofEpochSecond(Math.floorDiv(endMicros, 1000000L),

@@ -3,7 +3,9 @@ package graft.plans
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.{ColumnBridge => B}
+
+import graft.functions.BusinessTime
 
 /** SparkSessionExtensions hook: registers the engine's native expressions
   * as SQL functions, so `spark.sql("SELECT business_seconds(a, b)")` works
@@ -68,26 +70,29 @@ object GraftExtensions {
     ("topk_pairs", TopKPairs.info,
       arity(3, "topk_pairs(ord, payload, k)")(c => TopKPairs(c.head, c(1), intLit(c(2), "k")))))
 
-  /** Column-API form (requires [[register]] or the extensions conf). */
-  def businessSecondsExpr(start: Column, end: Column): Column =
-    call_function("business_seconds", start, end)
+  /** Column-API form of `business_seconds`, under `calendar` (the SQL
+    * function's is the default one). Needs no [[register]].
+    */
+  def businessSecondsExpr(start: Column, end: Column,
+                          calendar: BusinessTime.Calendar = BusinessTime.Calendar()): Column =
+    B.column(BusinessSeconds(B.expression(start), B.expression(end), calendar))
 
-  /** Column-API form of the native one-pass snake_case. */
-  def snakeCaseExpr(c: Column): Column = call_function("snake_case", c)
+  /** Column-API form of the native one-pass `snake_case`. Needs no [[register]]. */
+  def snakeCaseExpr(c: Column): Column = B.column(SnakeCase(B.expression(c)))
 
-  /** Register the SQL functions on an already-built session (idempotent —
-    * repeated calls from query constructors don't re-replace builders).
+  /** Register the SQL functions and the optimizer rule on an
+    * already-built session. Idempotent: a session that already resolves
+    * `snake_case` (an earlier call, or the extensions conf) is left as it
+    * is, so the rule is installed once.
     */
   def register(spark: SparkSession): Unit = {
-    // post-hoc optimizer injection: extraOptimizations is the runtime
-    // twin of injectOptimizerRule for sessions built without the
-    // extensions config (idempotent — add once per session)
-    if (!spark.experimental.extraOptimizations.contains(ThresholdLevenshteinRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ThresholdLevenshteinRule
     if (spark.sessionState.functionRegistry.functionExists(FunctionIdentifier("snake_case"))) return
     builders.foreach { case (name, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(FunctionIdentifier(name), info, builder)
     }
+    // extraOptimizations is the runtime twin of injectOptimizerRule for
+    // sessions built without the extensions conf
+    spark.experimental.extraOptimizations =
+      spark.experimental.extraOptimizations :+ ThresholdLevenshteinRule
   }
 }

@@ -59,8 +59,8 @@ object CoreQueries {
     o.join(c, o("o_custkey") === c("c_custkey"), "left")
       .select(
         concat(lit("ORD-"), col("o_orderkey").cast("string")).as("issue_key"),
-        StringFns.snakeCase(col("o_orderpriority")).as("queue"),
-        StringFns.snakeCase(col("o_orderstatus")).as("status"),
+        graft.plans.GraftExtensions.snakeCaseExpr(col("o_orderpriority")).as("queue"),
+        graft.plans.GraftExtensions.snakeCaseExpr(col("o_orderstatus")).as("status"),
         (col("o_orderstatus") === "F").as("is_closed"),
         col("o_orderstatus").isin("F", "P").as("is_resolved"),
         lower(regexp_replace(col("c_name"), " ", ".")).as("assignee"),
@@ -235,8 +235,7 @@ object CoreQueries {
     * ([[graft.plans.SnakeCase]]) — same oracle as f1_snake_case, so the
     * driver verifies the custom expression end-to-end against DuckDB.
     */
-  def f1SnakeCaseNative(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
+  def f1SnakeCaseNative(s: SparkSession, d: String): DataFrame =
     Tables.part(s, d)
       .select(
         col("p_partkey"),
@@ -244,7 +243,6 @@ object CoreQueries {
         graft.plans.GraftExtensions.snakeCaseExpr(col("p_type")).as("sn_type"),
         graft.plans.GraftExtensions.snakeCaseExpr(col("p_brand")).as("sn_brand"))
       .orderBy(col("p_partkey"))
-  }
 
   /** F2: emoji strip (emoji appended then removed — result must equal the
     * plain prefix).
@@ -571,7 +569,8 @@ object CoreQueries {
     * a watermark predicate + event-type filter + projection — all three
     * CLAIMED by the source (the reference's server-side Tracker-QL
     * compilation, `etl.py:66-111`, as Catalyst pushdown; asserted in
-    * Dsv2SourceSpec and visible in PlanAudit's scan description).
+    * Dsv2SourceSpec and visible in the scan description `graft.Profile`
+    * prints).
     */
   def dsv2ScanPushdown(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -1749,7 +1749,7 @@ object LlmQueries {
         col("nll_per_token"))
     // checkpointed: canon feeds BOTH the contamination corpus explode
     // and the anti-join's left side — without it the whole four-gate +
-    // perplexity subtree executes twice (PlanAudit showed the full nll
+    // perplexity subtree executes twice (the physical plan showed the full nll
     // pipeline duplicated; measured ~2x on the sf0.1 row)
     val canon = gated
       .withColumn("_fp", Dedup.exactFingerprint(col("text")))
@@ -3373,9 +3373,6 @@ object LlmQueries {
     * holidays), human-readable total, set-once last_seen.
     */
   def a1BusinessMetrics(s: SparkSession, d: String): DataFrame = {
-    // native codegen expression (falls back to the UDF when the session
-    // has no graft extensions registered)
-    graft.plans.GraftExtensions.register(s)
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val prevTs = coalesce(lag(col("ts"), 1).over(w), col("ts"))
     Tables.events(s, d)

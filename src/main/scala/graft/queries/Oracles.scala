@@ -52,9 +52,10 @@ object Oracles {
     s"CASE WHEN ($e) = 0 THEN '0s' ELSE array_to_string(list_slice(list_filter([${parts.mkString(", ")}], x -> x IS NOT NULL), 1, 2), ' ') END"
   }
 
-  /** BusinessTime.businessSecondsCol(s, e) as a correlated scalar subquery:
-    * overlap of [s, e] with 09:00–22:00 on Mon–Fri minus RU fixed holidays,
-    * whole seconds per day segment (matching the UDF's per-day truncation).
+  /** BusinessTime.businessSeconds(s, e) under the default calendar as a
+    * correlated scalar subquery: overlap of [s, e] with 09:00–22:00 on
+    * Mon–Fri minus RU fixed holidays, whole seconds per day segment
+    * (matching its per-day truncation).
     */
   private def busSeconds(s: String, e: String): String = {
     val holidays = "101,102,103,104,105,106,107,108,223,308,501,509,612,1104"

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{BusinessTime, StringFns, TimeFns}
+import graft.functions.{StringFns, TimeFns}
+import graft.plans.GraftExtensions
 import graft.schema.EngineConfig
 
 /** The issue-document transform: nested raw issues → the three flat
@@ -29,7 +30,10 @@ object IssueTransform {
   /** null-safe lowered access (validate_resource low=True, helpers.py:91-99). */
   private def low(c: Column): Column = lower(c)
 
-  private def snakeLower(c: Column): Column = StringFns.snakeCase(lower(c))
+  /** Lowercase, then the one-pass `snake_case` kernel
+    * ([[graft.plans.SnakeCase]], equal to `StringFns.snakeCase`).
+    */
+  private def snakeLower(c: Column): Column = GraftExtensions.snakeCaseExpr(lower(c))
 
   private def emptyStrArray: Column = array().cast("array<string>")
 
@@ -81,7 +85,7 @@ object IssueTransform {
         transitionEnd(col("ev")).as("end_ts"))
       .withColumn("duration", abs(TimeFns.timedeltaSeconds(col("end_ts"), col("start_ts"))))
       .withColumn("busdays_duration",
-        BusinessTime.businessSecondsUdf(cfg.calendar)(col("start_ts"), col("end_ts")))
+        GraftExtensions.businessSecondsExpr(col("start_ts"), col("end_ts"), cfg.calendar))
 
   /** A1: per-(issue, from-status) metric rows ≙ issue_metrics DDL
     * (models/issue.py:212-224, row class :43-62). `last_seen` is the end

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (same configs as the
-  * Verify/Bench mains so behavior matches the driver's runs).
+/** Shared local SparkSession for all suites, built by [[Session]] like
+  * the Bench and Verify sessions.
   *
   * Every test starts from an EMPTY cache: suites run sequentially in
   * one forked JVM against one shared session, so without the clear a
@@ -53,13 +53,7 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterEach {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    // match the Verify/Bench sessions (r14): cached plans may coalesce
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    .getOrCreate()
+  // four threads whatever SPARK_GRAFT_CPUS says, so test partitioning
+  // does not depend on the machine
+  lazy val session: SparkSession = Session.local(4)
 }

@@ -590,7 +590,7 @@ class CorpusSelectionSpec extends SparkSuite {
       .select(col("shard"), col("st.loads").as("loads"), col("st.bins").as("bins"))
       .as[(Long, Seq[Option[Long]], Seq[Int])].collect().sortBy(_._1).toSeq
     val kernel = run(CorpusSelection.bestFitState(col("_docs"), 50L))
-    val hof = run(CorpusSelection.bestFitStateHof(col("_docs"), 50L))
+    val hof = run(ReferenceForms.bestFitStateHof(col("_docs"), 50L))
     assert(kernel == hof)
     // and the null edge actually exercised: at least one null load slot
     assert(kernel.exists(_._2.exists(_.isEmpty)))

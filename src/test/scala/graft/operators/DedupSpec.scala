@@ -274,7 +274,7 @@ class DedupSpec extends SparkSuite {
     val sigs = Dedup.minHashSignatures(docs, "text", "doc_id")
     val native = Dedup.lshBuckets(sigs, "doc_id", bands = 32, rows = 4)
       .as[(Long, Int, Int)].collect().toSet
-    val composed = Dedup.lshBucketsComposed(sigs, "doc_id", bands = 32, rows = 4)
+    val composed = ReferenceForms.lshBucketsComposed(sigs, "doc_id", bands = 32, rows = 4)
       .as[(Long, Int, Int)].collect().toSet
     assert(native == composed)
     assert(native.nonEmpty)

@@ -35,7 +35,7 @@ class QualityClassifierSpec extends SparkSuite {
         .as[(Long, Seq[Int])].collect().sortBy(_._1).toSeq
       val composed = docs.select(col("id"),
         transform(QualityClassifier.features(col("text")),
-          f => (QualityClassifier.md24Hof(f) % buckets).cast("int")).as("bs"))
+          f => (ReferenceForms.md24Hof(f) % buckets).cast("int")).as("bs"))
         .as[(Long, Seq[Int])].collect().sortBy(_._1).toSeq
       assert(kernel == composed, s"buckets=$buckets")
     }
@@ -69,7 +69,7 @@ class QualityClassifierSpec extends SparkSuite {
       .select(col("id"), expr("transform(fs, f -> struct(f._1 as bucket, f._2 as cnt))").as("fs"))
     val kernel = docs.select(col("id"), QualityClassifier.scoreAgainst(w).as("s"))
       .as[(Long, Long)].collect().sortBy(_._1).toSeq
-    val hof = docs.select(col("id"), QualityClassifier.scoreAgainstHof(w).as("s"))
+    val hof = docs.select(col("id"), ReferenceForms.scoreAgainstHof(w).as("s"))
       .as[(Long, Long)].collect().sortBy(_._1).toSeq
     assert(kernel == hof)
   }

@@ -24,9 +24,9 @@ class SimilaritySpec extends SparkSuite {
     }.toDF("vec_id", "embedding")
     val mismatches = df.select(
       Similarity.dot(col("embedding"), col("embedding")).as("dn"),
-      Similarity.dotHof(col("embedding"), col("embedding")).as("dh"),
+      ReferenceForms.dotHof(col("embedding"), col("embedding")).as("dh"),
       Similarity.lshBucket(col("embedding"), 16, 12, seed = 5L).as("bn"),
-      Similarity.lshBucketHof(col("embedding"), 16, 12, seed = 5L).as("bh"))
+      ReferenceForms.lshBucketHof(col("embedding"), 16, 12, seed = 5L).as("bh"))
       .where(col("dn") =!= col("dh") || col("bn") =!= col("bh"))
       .count()
     assert(mismatches == 0)
@@ -40,7 +40,7 @@ class SimilaritySpec extends SparkSuite {
     val df = (0 until 200).map(i => (i.toLong, Seq.fill(8)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding")
     val diff = df.select(
-      Similarity.nearestCellHof(col("embedding"), centsWithTie).as("hof"),
+      ReferenceForms.nearestCellHof(col("embedding"), centsWithTie).as("hof"),
       org.apache.spark.sql.graft.ColumnBridge.column(graft.plans.NearestCentroid(
         org.apache.spark.sql.graft.ColumnBridge.expression(col("embedding").cast("array<double>")),
         centsWithTie.map(_.toSeq).toSeq)).as("native"))
@@ -51,7 +51,7 @@ class SimilaritySpec extends SparkSuite {
     // native form's fallback must agree
     val bad = Seq((1L, Seq(1.0f, 2.0f))).toDF("vec_id", "embedding")
     val r = bad.select(
-      Similarity.nearestCellHof(col("embedding"), centsWithTie).as("hof"),
+      ReferenceForms.nearestCellHof(col("embedding"), centsWithTie).as("hof"),
       org.apache.spark.sql.graft.ColumnBridge.column(graft.plans.NearestCentroid(
         org.apache.spark.sql.graft.ColumnBridge.expression(col("embedding").cast("array<double>")),
         centsWithTie.map(_.toSeq).toSeq)).as("native")).collect()(0)
@@ -60,7 +60,7 @@ class SimilaritySpec extends SparkSuite {
     val withNull = Seq(Tuple1(Seq[java.lang.Double](1.0, null, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0)))
       .toDF("embedding")
     val rn = withNull.select(
-      Similarity.nearestCellHof(col("embedding"), centsWithTie).as("hof"),
+      ReferenceForms.nearestCellHof(col("embedding"), centsWithTie).as("hof"),
       org.apache.spark.sql.graft.ColumnBridge.column(graft.plans.NearestCentroid(
         org.apache.spark.sql.graft.ColumnBridge.expression(col("embedding").cast("array<double>")),
         centsWithTie.map(_.toSeq).toSeq)).as("native")).collect()(0)

@@ -53,7 +53,7 @@ class UnigramLmSpec extends SparkSuite {
       f(words.toDF(), costs.toDF(), 4).orderBy(col("word"), col("wcnt"))
         .as[(String, Long, String)].collect().toSeq
     val kernel = run(UnigramLm.viterbiSeg)
-    val hof = run(UnigramLm.viterbiSegHof)
+    val hof = run(ReferenceForms.viterbiSegHof)
     assert(kernel == hof)
     assert(kernel.nonEmpty && kernel.size < words.count(),
       "some words must drop as unreachable for the edge to be exercised")

@@ -39,7 +39,7 @@ class WinnowSpec extends SparkSuite {
       val composed = docs.select(col("doc_id"),
         when(size(toks) >= k,
           transform(sequence(lit(0), size(toks) - k), i =>
-            QualityClassifier.md24Hof(array_join(slice(toks, i + 1, lit(k)), " "))
+            ReferenceForms.md24Hof(array_join(slice(toks, i + 1, lit(k)), " "))
               * 16777216L + (lit(16777215L) - i)))
           .otherwise(array().cast("array<long>")).as("ks"))
         .as[(Long, Seq[Long])].collect().sortBy(_._1).toSeq

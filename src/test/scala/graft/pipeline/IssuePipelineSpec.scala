@@ -541,6 +541,35 @@ class IssuePipelineSpec extends SparkSuite {
     assert(jobs <= 10, s"$jobs jobs")
   }
 
+  test("a custom business calendar reaches issue_metrics.busdays_duration") {
+    // 10:00-18:00, Monday to Saturday, 2024-01-10 decreed non-working
+    val cal = graft.functions.BusinessTime.Calendar(startHour = 10, endHour = 18,
+      workDays = java.time.DayOfWeek.values.toSet - java.time.DayOfWeek.SUNDAY,
+      extraHolidays = Set(java.time.LocalDate.of(2024, 1, 10)))
+    val src = raw(issue("TEST-1", "Closed", updatedAt = t("12:00", "2024-01-15"), changelog = Seq(
+      wfEvent(t("15:30"), Seq(statusField("Open", "In progress"), dtField(null, t("15:30")))),
+      wfEvent(t("20:00", "2024-01-11"), Seq(statusField("In progress", "Testing"),
+        dtField(t("15:30"), t("20:00", "2024-01-11")))),
+      wfEvent(t("09:30", "2024-01-15"), Seq(statusField("Testing", "In progress"),
+        dtField(t("20:00", "2024-01-11"), t("09:30", "2024-01-15")))),
+      wfEvent(t("12:00", "2024-01-15"), Seq(statusField("In progress", "Closed"),
+        dtField(t("09:30", "2024-01-15"), t("12:00", "2024-01-15")))))))
+    val dir = java.nio.file.Files.createTempDirectory("graft-calendar").toString
+    IssuePipeline.run(src, EngineConfig(calendar = cal), new ParquetSink(dir),
+      version = lit("2024-02-01 00:00:00").cast("timestamp"))
+    val got = spark.read.parquet(s"$dir/issue_metrics")
+      .select("status_name", "duration", "busdays_duration").collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    // (wall seconds, business seconds): Tuesday 10:00-15:30; Tuesday
+    // 15:30-18:00 + Thursday 10:00-18:00 + Monday 10:00-12:00; Friday and
+    // Saturday 10:00-18:00. Under the default calendar `testing` would
+    // read 46,800 (Friday 09:00-22:00, Saturday off).
+    assert(got == Map(
+      "open" -> ((19800L, 19800L)),
+      "in_progress" -> ((198000L, 45000L)),
+      "testing" -> ((307800L, 57600L))))
+  }
+
   test("RunStats are identical under every sink; a sink that skips a table gets an exact count") {
     val src = raw(
       issue("TEST-1", "Closed", changelog = walkthroughEvents),

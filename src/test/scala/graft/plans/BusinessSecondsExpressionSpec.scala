@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.functions.BusinessTime
 
-/** The native expression must agree with the reference-semantics UDF on
-  * every input, run inside whole-stage codegen, and be SQL-callable.
+/** The native expression must agree with the plain-Scala
+  * [[BusinessTime.businessSeconds]] on every input under any calendar,
+  * run inside whole-stage codegen, and be SQL-callable.
   */
 class BusinessSecondsExpressionSpec extends SparkSuite {
 
@@ -22,20 +23,30 @@ class BusinessSecondsExpressionSpec extends SparkSuite {
     }
   }
 
-  test("expression == UDF == direct Scala on 200 seeded intervals") {
+  test("kernel == plain Scala, default and custom calendar") {
     assert(registered)
     import spark.implicits._
-    val df = pairs.toDF("s", "e")
-    val out = df.select(
-      GraftExtensions.businessSecondsExpr(col("s"), col("e")).as("native"),
-      BusinessTime.businessSecondsUdf()(col("s"), col("e")).as("viaUdf"),
+    // other hours, Saturdays on, and a decreed holiday inside the range
+    val custom = BusinessTime.Calendar(startHour = 7, endHour = 19,
+      workDays = java.time.DayOfWeek.values.toSet - java.time.DayOfWeek.SUNDAY,
+      extraHolidays = Set(java.time.LocalDate.of(2024, 2, 6), java.time.LocalDate.of(2024, 3, 12)))
+    // RDD-backed, so the projection is not folded at optimize time, and no
+    // interpreted fallback: the calendar must compile as a reference object
+    val df = spark.sparkContext.parallelize(pairs).toDF("s", "e")
+    val saved = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    val out = try df.select(
+      GraftExtensions.businessSecondsExpr(col("s"), col("e")).as("default"),
+      GraftExtensions.businessSecondsExpr(col("s"), col("e"), custom).as("custom"),
       col("s"), col("e")).collect()
+    finally spark.conf.set("spark.sql.codegen.fallback", saved)
     for (r <- out) {
-      assert(r.getLong(0) == r.getLong(1))
-      val direct = BusinessTime.businessSeconds(
-        r.getTimestamp(2).toLocalDateTime, r.getTimestamp(3).toLocalDateTime)
-      assert(r.getLong(0) == direct)
+      val (s, e) = (r.getTimestamp(2).toLocalDateTime, r.getTimestamp(3).toLocalDateTime)
+      assert(r.getLong(0) == BusinessTime.businessSeconds(s, e))
+      assert(r.getLong(1) == BusinessTime.businessSeconds(s, e, custom))
     }
+    assert(out.count(r => r.getLong(0) != r.getLong(1)) > out.length / 2,
+      "the custom calendar must change most results")
   }
 
   test("SQL-callable and null-safe") {
@@ -59,8 +70,10 @@ class BusinessSecondsExpressionSpec extends SparkSuite {
     assert(!plan.contains("ScalaUDF"))
     // "*(1)" prefixes mark operators inside WholeStageCodegen stage 1
     assert(plan.linesIterator.next().startsWith("*(1) Project [business_seconds"))
-    val viaUdf = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
-      .select(BusinessTime.businessSecondsUdf()(col("ts"), col("ts") + expr("INTERVAL 1 DAY")).as("b"))
-    assert(ev.collect().map(_.getLong(0)).toSeq == viaUdf.collect().map(_.getLong(0)).toSeq)
+    val direct = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
+      .select(col("ts"), (col("ts") + expr("INTERVAL 1 DAY")).as("te")).collect()
+      .map(r => BusinessTime.businessSeconds(
+        r.getTimestamp(0).toLocalDateTime, r.getTimestamp(1).toLocalDateTime))
+    assert(ev.collect().map(_.getLong(0)).toSeq == direct.toSeq)
   }
 }
