@@ -87,7 +87,7 @@ object PipelineMain {
     System.err.println(s"[pipeline] scan mode: $mode")
 
     def runBatch(): Unit = {
-      val stats = IssuePipeline.run(readRaw(spark, rawPath), cfg, sink, state)
+      val stats = withRaw(spark, rawPath)(IssuePipeline.run(_, cfg, sink, state))
       println(s"[pipeline] issues=${stats.issuesProcessed} metrics=${stats.metricsRows} " +
         s"changelog=${stats.changelogRows} no_metrics=${stats.issuesWithoutMetrics} " +
         s"watermark=${stats.newWatermark.getOrElse("-")} uploaded=${stats.uploaded}")
@@ -141,14 +141,16 @@ object PipelineMain {
 
   /** P9: malformed JSON rows go to a bad-record side channel instead of
     * failing the batch (reference skips-and-logs per issue,
-    * etl.py:180-183). Re-read per daemon tick, so a file refreshed
-    * between ticks is picked up.
+    * etl.py:180-183). Re-read per daemon tick, and the JSON parse is
+    * released when `f` returns, so a file refreshed between ticks is
+    * picked up.
     */
-  private def readRaw(spark: SparkSession, rawPath: String): DataFrame =
-    if (rawPath.endsWith(".json") || rawPath.endsWith(".ndjson")) {
-      val (good, bad) = graft.sources.RawIssueSource.jsonWithBadRecords(spark, rawPath)
-      val nBad = bad.count()
-      if (nBad > 0) System.err.println(s"[pipeline] $nBad malformed source rows skipped")
-      good
-    } else spark.read.parquet(rawPath)
+  private def withRaw[A](spark: SparkSession, rawPath: String)(f: DataFrame => A): A =
+    if (rawPath.endsWith(".json") || rawPath.endsWith(".ndjson"))
+      graft.sources.RawIssueSource.withJsonBadRecords(spark, rawPath) { (good, bad) =>
+        val nBad = bad.count()
+        if (nBad > 0) System.err.println(s"[pipeline] $nBad malformed source rows skipped")
+        f(good)
+      }
+    else f(spark.read.parquet(rawPath))
 }

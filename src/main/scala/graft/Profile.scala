@@ -1,25 +1,29 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import scala.util.control.NonFatal
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Per-query profile of the registry queries named in `SPARK_GRAFT_ONLY`,
-  * on the [[Session]] engine configuration Bench runs. For each query:
+  * on the [[Session]] engine configuration Bench runs. Each query runs
+  * once warm and once timed; from the timed run:
   *
-  *   - `<outDir>/<query>.txt` holds `explain("formatted")` of its plan;
-  *   - the condensed physical plan goes to stdout, one operator per line:
-  *     scans and pushed filters, joins, exchanges, aggregates, codegen
-  *     stages and cache reads;
-  *   - after one warm run, a timed run prints one JSON line with the wall
-  *     seconds, Spark jobs and completed stages.
+  *   - `<outDir>/<query>.txt` holds `explain("formatted")` of the plan
+  *     that ran (AQE's final plan, with its runtime broadcasts and
+  *     coalesced partitions);
+  *   - the condensed form of that plan goes to stdout, one operator per
+  *     line: scans and pushed filters, joins, exchanges, aggregates,
+  *     codegen stages and cache reads;
+  *   - one JSON line with the wall seconds, Spark jobs and completed
+  *     stages.
   *
   * The timed action writes the query to Spark's `noop` sink, which
   * computes every output column; a `count()` would let Catalyst prune
@@ -70,8 +74,11 @@ object Profile {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
     })
 
-    /** Warm run, then the timed run: (seconds, jobs, stages) of the latter. */
-    def measure(fn: (SparkSession, String) => DataFrame, dir: String): (Double, Int, Int) = {
+    /** Warm run, then the timed run: (seconds, jobs, stages) of the latter
+      * and the completed execution of its `noop` write, the last query it
+      * runs.
+      */
+    def measure(fn: (SparkSession, String) => DataFrame, dir: String): (Double, Int, Int, QueryExecution) = {
       def once(): Double = {
         val t0 = System.nanoTime()
         try fn(spark, dir).write.format("noop").mode("overwrite").save()
@@ -81,9 +88,17 @@ object Profile {
       once()
       GraftBridge.drainListenerBus(spark)
       jobs.set(0); stages.set(0)
-      val sec = once()
-      GraftBridge.drainListenerBus(spark)
-      (sec, jobs.get, stages.get)
+      val last = new AtomicReference[QueryExecution]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = last.set(qe)
+        override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        val sec = once()
+        GraftBridge.drainListenerBus(spark)
+        (sec, jobs.get, stages.get, last.get)
+      } finally spark.listenerManager.unregister(listener)
     }
 
     lazy val scaledDir = scaledCorpus(spark, sfDir, outDir.resolve(s"x$copies"), copies)
@@ -91,17 +106,16 @@ object Profile {
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       try {
-        val qe = fn(spark, sfDir).queryExecution
+        val (sec, nJobs, nStages, qe) = measure(fn, sfDir)
         Files.writeString(outDir.resolve(s"$name.txt"), qe.explainString(FormattedMode))
         println(s"===== $name")
-        qe.executedPlan.toString.linesIterator
+        // AQE prints the initial plan after the final one; only the final ran
+        qe.executedPlan.toString.linesIterator.takeWhile(!_.contains("== Initial Plan =="))
           .filter(l => PlanMarkers.exists(l.contains)).map(_.take(220)).foreach(println)
-        spark.catalog.clearCache()
-        val (sec, nJobs, nStages) = measure(fn, sfDir)
         val scaled =
           if (copies == 1) ""
           else {
-            val (secN, _, _) = measure(fn, scaledDir)
+            val (secN, _, _, _) = measure(fn, scaledDir)
             f""","sec_x$copies":$secN%.3f,"ratio":${secN / sec}%.2f"""
           }
         println(f"""{"q":"$name","sec":$sec%.3f,"jobs":$nJobs,"stages":$nStages$scaled}""")

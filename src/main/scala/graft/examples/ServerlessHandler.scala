@@ -1,10 +1,11 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.pipeline.{ErrorReporting, IssuePipeline}
 import graft.schema.EngineConfig
 import graft.sinks.Sink
+import graft.sources.RawIssueSource
 import graft.state.StateStore
 
 /** Single-invocation (serverless / FaaS) entry point ≙ the reference's
@@ -34,11 +35,10 @@ object ServerlessHandler {
     try {
       val rawPath = event.getOrElse("raw",
         throw new IllegalArgumentException("event must carry a 'raw' input path"))
-      val raw =
-        if (rawPath.endsWith(".json") || rawPath.endsWith(".ndjson"))
-          graft.sources.RawIssueSource.jsonWithBadRecords(spark, rawPath)._1
-        else spark.read.parquet(rawPath)
-      IssuePipeline.run(raw, cfg, sink, state)
+      def run(raw: DataFrame) = IssuePipeline.run(raw, cfg, sink, state)
+      if (rawPath.endsWith(".json") || rawPath.endsWith(".ndjson"))
+        RawIssueSource.withJsonBadRecords(spark, rawPath)((good, _) => run(good))
+      else run(spark.read.parquet(rawPath))
       Response(200, "success") // ≙ serverless/main.py:10-11
     } catch {
       case scala.util.control.NonFatal(exc) =>

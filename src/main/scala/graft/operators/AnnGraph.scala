@@ -175,11 +175,8 @@ object AnnGraph {
     // localCheckpoint lifecycle — Bench/Verify additionally clearCache
     // between queries). vecs is released here because `out`'s lineage
     // no longer references it.
-    if (Materialize.debugNoCut(out)) out
-    else {
-      Materialize.release(vecs)
-      out
-    }
+    Materialize.release(vecs)
+    out
   }
 
   /** Beam search over a [[buildGraph]] adjacency: the beam is SEEDED
@@ -255,10 +252,7 @@ object AnnGraph {
     // stays alive until the caller drops the result (localCheckpoint
     // lifecycle); vecs is released because `out`'s lineage no longer
     // references it.
-    if (Materialize.debugNoCut(out)) out
-    else {
-      Materialize.release(vecs)
-      out
-    }
+    Materialize.release(vecs)
+    out
   }
 }

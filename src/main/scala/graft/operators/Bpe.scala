@@ -26,14 +26,13 @@ import org.apache.spark.sql.functions._
   * k merges cost k vocabulary-sized jobs, not k corpus passes. The
   * 1-row-per-round `collect` is the watermark-commit class of driver
   * action (sanctioned); each round's vocabulary goes through
-  * [[Materialize.cutLoop]] — an eager TRUNCATING checkpoint under every
-  * materialization policy, releasing the previous generation's blocks —
-  * so round k's plan is always one rewrite deep and exactly one
-  * generation of vocab storage is live (the persist policy's
-  * lineage-retaining cut would nest k plans and pin k generations: a
-  * driver OOM at real merge counts, not a slowdown). BPE's
-  * sequential-merge dependency is inherent — parallelism lives INSIDE
-  * each round's aggregate.
+  * [[Materialize.cutLoop]] — an eager TRUNCATING checkpoint that
+  * releases the previous generation's blocks — so round k's plan is
+  * always one rewrite deep and exactly one generation of vocab storage
+  * is live (a lineage-retaining persist cut would nest k plans and pin
+  * k generations: a driver OOM at real merge counts, not a slowdown).
+  * BPE's sequential-merge dependency is inherent — parallelism lives
+  * INSIDE each round's aggregate.
   */
 object Bpe {
 

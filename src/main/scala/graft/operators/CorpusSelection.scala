@@ -1046,12 +1046,9 @@ object CorpusSelection {
           .otherwise(col("n_both").cast("double")
             / (col("n_both") + col("n_a_only") + col("n_b_only")).cast("double")))
       .orderBy(col("gate_a"), col("gate_b"))
-    if (Materialize.debugNoCut(out)) out
-    else {
-      val pinned = Materialize.cutPinned(out)
-      Materialize.release(one)
-      pinned
-    }
+    val pinned = Materialize.cutPinned(out)
+    Materialize.release(one)
+    pinned
   }
 
   /** Selection-pressure audit: per gate, how the kept set's mean score
@@ -1078,12 +1075,9 @@ object CorpusSelection {
     }.reduce(_.unionByName(_))
       .withColumn("shift", col("mean_kept") - col("mean_all"))
       .orderBy(col("gate"))
-    if (Materialize.debugNoCut(out)) out
-    else {
-      val pinned = Materialize.cutPinned(out)
-      Materialize.release(one)
-      pinned
-    }
+    val pinned = Materialize.cutPinned(out)
+    Materialize.release(one)
+    pinned
   }
 
   /** Leave-one-source-out ablation of a corpus-mean metric — the

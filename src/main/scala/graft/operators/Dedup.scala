@@ -93,8 +93,8 @@ object Dedup {
     * silently losing them forever.
     *
     * The survivors are pinned with [[Materialize.cutPinned]] — an eager
-    * `localCheckpoint` under EVERY materialization policy, the one site
-    * where the persist default is FORBIDDEN: the survivors' plan scans
+    * `localCheckpoint`, the one site where a persist cut is FORBIDDEN:
+    * the survivors' plan scans
     * the store parquet at `storeDir`, and the commit below writes to
     * that same path, so a persist cut (lineage retained) would trigger
     * `CacheManager.recacheByPath` on the append and recompute the
@@ -593,7 +593,7 @@ object Dedup {
     * candidate pipeline AND both sides of the verification join — the
     * previous form re-scanned the (column-pruned) input and re-ran the
     * shingle kernel once per consumer, 3× the operator's per-row CPU.
-    * Under the default `persist(MEMORY_AND_DISK)` policy the hash arrays
+    * Under the `persist(MEMORY_AND_DISK)` cut the hash arrays
     * are materialized once (written once, read by three consumers) with
     * lineage intact, so a lost executor recomputes the lost blocks
     * instead of failing the job. Note the weaker row-identity guarantee
@@ -603,8 +603,8 @@ object Dedup {
     * executor loss. Deterministic inputs (any pure projection of a
     * source read — every call site in this engine) are unaffected;
     * feed a non-deterministic upstream through
-    * [[Materialize.cutPinned]] first, or run under the
-    * `localCheckpoint` policy, to get the strong same-rows pin back.
+    * [[Materialize.cutPinned]] first to get the strong same-rows pin
+    * back.
     */
   def minHashPairs(docs: DataFrame, textCol: String, idCol: String,
                    threshold: Double = 0.5, k: Int = 3,
@@ -806,7 +806,7 @@ object Dedup {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.types.BinaryType
-    // Pinned eager checkpoint (NOT the policy default): consumed by the
+    // Pinned eager checkpoint (NOT a persist cut): consumed by the
     // Bloom build AND the exact confirm — without a cut the probe
     // tokenization runs twice. cutPinned rather than cutEager because
     // the persist form measured a reproducible >=2x premium on this

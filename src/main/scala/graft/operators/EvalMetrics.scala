@@ -257,12 +257,9 @@ object EvalMetrics {
         col("iso_fp"),
         (col("iso_fp").cast("double") / 1099511627776.0).as("iso_accuracy"))
       .orderBy(col("bin"))
-    if (Materialize.debugNoCut(out)) out
-    else {
-      val pinned = Materialize.cutPinned(out)
-      Materialize.release(b)
-      pinned
-    }
+    val pinned = Materialize.cutPinned(out)
+    Materialize.release(b)
+    pinned
   }
 
   /** Cohen's kappa between two raters (the LLM-judge agreement check):

@@ -861,11 +861,8 @@ object Graph {
     val out = e.select(col("u").as("src"), col("v").as("dst"),
       col("support").cast("int").as("support"))
       .orderBy(col("src"), col("dst"))
-    if (Materialize.debugNoCut(out)) (out, counts.result())
-    else {
-      val pinned = Materialize.cutPinned(out)
-      Materialize.release(e)
-      (pinned, counts.result())
-    }
+    val pinned = Materialize.cutPinned(out)
+    Materialize.release(e)
+    (pinned, counts.result())
   }
 }

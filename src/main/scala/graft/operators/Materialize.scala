@@ -3,27 +3,22 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Reuse-point materialization policy for multi-consumer intermediates.
+/** Reuse-point materialization for multi-consumer intermediates.
   *
   * Operators that feed one intermediate DataFrame to several consumers
   * (a tokenization shared by a model fit and a scoring pass, a gated
   * corpus feeding both sides of an anti-join) must cut the plan once,
-  * or every consumer replays the whole upstream subtree. Rounds 1-8
-  * used `localCheckpoint(false)` for this, which has the right reuse
-  * shape but the wrong failure mode at cluster scale: it truncates
-  * lineage AND keeps the blocks on executor-local storage only, so one
-  * lost executor fails the job unrecoverably. The default here is
-  * `persist(MEMORY_AND_DISK)`: blocks are still computed once and
-  * reused by every consumer, but lineage survives, so an executor loss
-  * recomputes the lost partitions instead of killing the run.
+  * or every consumer replays the whole upstream subtree. A cut is
+  * `persist(MEMORY_AND_DISK)`: the blocks are computed once and reused
+  * by every consumer, and lineage survives, so a lost executor
+  * recomputes its partitions instead of failing the job. Rounds 1-8
+  * used `localCheckpoint(false)`, which has the same reuse shape but
+  * keeps the blocks on executor-local storage only with the lineage
+  * truncated, so one lost executor fails the run unrecoverably.
   *
-  * Knob: `spark.graft.materialize` =
-  *   - `persist` (default) — `persist(MEMORY_AND_DISK)`, lineage kept;
-  *   - `localCheckpoint` — the pre-round-9 behavior (marginally cheaper
-  *     on a single-JVM `local[n]` master where executor loss cannot
-  *     happen, and frees its blocks by GC instead of cache pinning);
-  *   - `none` — no cut at all (plan-shape debugging only; shared
-  *     subtrees re-execute per consumer).
+  * Two cuts truncate lineage on purpose: [[cutPinned]] (an operator
+  * that writes a path its own plan reads) and [[cutLoop]] (iteration
+  * generations). Everything else persists.
   *
   * Persisted blocks are pinned by the session's cache manager until
   * `spark.catalog.clearCache()` or `unpersist()`. `Bench` and `Verify`
@@ -33,70 +28,37 @@ import org.apache.spark.storage.StorageLevel
   * obtained).
   */
 object Materialize {
-  private def policy(df: DataFrame): String = {
-    val v = df.sparkSession.conf.get("spark.graft.materialize", "persist")
-    v match {
-      case "persist" | "localCheckpoint" | "none" => v
-      // fail loudly: a typo ("localcheckpoint") silently mapping to the
-      // default would make misconfiguration invisible
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.materialize=$other (expected persist|localCheckpoint|none)")
-    }
+  def cut(df: DataFrame): DataFrame = df.persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Eager cut: `persist` + a `count()` action, for a caller that needs
+    * the blocks computed NOW (e.g. a bounded probe about to be collected).
+    */
+  def cutEager(df: DataFrame): DataFrame = {
+    val p = cut(df)
+    p.count()
+    p
   }
 
-  def cut(df: DataFrame): DataFrame =
-    policy(df) match {
-      case "localCheckpoint" => df.localCheckpoint(eager = false)
-      case "none"            => df
-      case _                 => df.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-
-  /** Eager cut — where `.localCheckpoint(true)` used to be: the caller
-    * needs the blocks computed NOW (e.g. a bounded probe about to be
-    * collected, or a loop iteration whose lineage must not stack).
-    * Under the default persist policy that is `persist` + a `count()`
-    * action to force population; lineage survives executor loss.
-    */
-  def cutEager(df: DataFrame): DataFrame =
-    policy(df) match {
-      case "localCheckpoint" => df.localCheckpoint(eager = true)
-      case "none"            => df
-      case _ =>
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        p
-    }
-
-  /** Pinned cut — an eager `localCheckpoint` under EVERY policy,
-    * including the persist default. Use it when the operator is about to
-    * WRITE to a path its own plan READS (a read-modify-commit cycle such
-    * as [[graft.operators.Dedup.incrementalDedupRun]]): under `persist`
-    * the cached plan keeps its lineage, so the commit write triggers
+  /** Pinned cut — an eager `localCheckpoint`. Use it when the operator is
+    * about to WRITE to a path its own plan READS (a read-modify-commit
+    * cycle such as [[graft.operators.Dedup.incrementalDedupRun]]): a
+    * persist cut keeps its lineage, so the commit write triggers
     * `CacheManager.recacheByPath` on the store path and the cached
     * result is recomputed against the just-mutated store — the
     * operator's own commit invalidates its own output (observed as
     * 0-row results). Only a true lineage truncation removes the store
     * scan from the plan; resilience-via-lineage is exactly the property
-    * that makes persist WRONG here, so this method ignores the policy
-    * knob on purpose.
+    * that makes persist WRONG here.
     */
   def cutPinned(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
-  /** True under the `none` policy (plan-shape debugging). Operators that
-    * normally pin their result and release internal generations check
-    * this to instead return the raw uncut plan (and keep the
-    * generations alive) — the full operator tree stays inspectable.
-    */
-  def debugNoCut(df: DataFrame): Boolean = policy(df) == "none"
-
-  /** Loop-iteration cut — eager, truncating under EVERY policy, and
-    * frees the PREVIOUS generation's blocks. Iterative refinement
-    * (`Bpe.train`'s merge rounds, k-means passes) must not stack
-    * lineage: under the persist default each `.materialized` keeps the
-    * full plan, so round k nests k `InMemoryRelation`s (quadratic
-    * analyzer work, eventual StackOverflow) and pins k generations of
-    * cache with no unpersist. Mirrors the RDD persist/unpersist
-    * discipline of the connected-components fixpoint
+  /** Loop-iteration cut — eager, truncating, and frees the PREVIOUS
+    * generation's blocks. Iterative refinement (`Bpe.train`'s merge
+    * rounds, k-means passes) must not stack lineage: a persist cut keeps
+    * the full plan, so round k would nest k `InMemoryRelation`s
+    * (quadratic analyzer work, eventual StackOverflow) and pin k
+    * generations of cache with no unpersist. Mirrors the RDD
+    * persist/unpersist discipline of the connected-components fixpoint
     * ([[graft.operators.Dedup.connectedComponents]]): checkpoint the new
     * generation, then release the old one — its blocks are dead the
     * moment the new generation is materialized.
@@ -122,6 +84,5 @@ object Materialize {
   implicit class MatOps(private val df: DataFrame) extends AnyVal {
     def materialized: DataFrame = Materialize.cut(df)
     def materializedEager: DataFrame = Materialize.cutEager(df)
-    def materializedPinned: DataFrame = Materialize.cutPinned(df)
   }
 }

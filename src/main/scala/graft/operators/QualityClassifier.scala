@@ -195,14 +195,10 @@ object QualityClassifier {
       .agg(count(lit(1)).cast("int").as("n_docs"),
         sum(when(col("_wrong"), 1L).otherwise(0L)).cast("int").as("n_wrong"))
     // truncating pin so the cached feature table can be released before
-    // the caller consumes the 2-row result. Under the debug policy the
-    // raw plan is returned uncut (and nothing released).
-    if (Materialize.debugNoCut(out)) out
-    else {
-      val pinned = Materialize.cutPinned(out)
-      Materialize.release(grouped)
-      pinned
-    }
+    // the caller consumes the 2-row result.
+    val pinned = Materialize.cutPinned(out)
+    Materialize.release(grouped)
+    pinned
   }
 
   /** The hashed (id, y, bucket, cnt) feature table both trainers share.
@@ -347,11 +343,8 @@ object QualityClassifier {
         col("variability_num"),
         when(col("_tert") === 3, "ambiguous")
           .when(col("_sq") > 0, "easy").otherwise("hard").as("bucket"))
-    if (Materialize.debugNoCut(out)) out
-    else {
-      val pinned = Materialize.cutPinned(out)
-      Materialize.release(grouped)
-      pinned
-    }
+    val pinned = Materialize.cutPinned(out)
+    Materialize.release(grouped)
+    pinned
   }
 }

@@ -1065,16 +1065,11 @@ object Similarity {
       .agg(count(lit(1)).cast("int").as("n_members"), sum(col("d2")).as("inertia_fp"))
     // truncating pin, not a persist cut: the centroid generation released
     // below is a localCheckpoint — a lineage-retaining cut could try to
-    // recompute through its freed blocks. Under the debug policy the raw
-    // plan is returned uncut (and nothing released) so it stays
-    // inspectable.
-    if (Materialize.debugNoCut(out)) out
-    else {
-      val pinned = Materialize.cutPinned(out)
-      Materialize.release(q)
-      Materialize.release(cents)
-      pinned
-    }
+    // recompute through its freed blocks.
+    val pinned = Materialize.cutPinned(out)
+    Materialize.release(q)
+    Materialize.release(cents)
+    pinned
   }
 
   /** Multi-vector late-interaction scoring (the ColBERT MaxSim operator,

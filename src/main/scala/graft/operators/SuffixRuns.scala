@@ -108,12 +108,9 @@ object SuffixRuns {
       .withColumn("keep_frac",
         (col("n_tokens") - col("n_covered")).cast("double") / col("n_tokens").cast("double"))
       .orderBy(col("doc_id"))
-    if (Materialize.debugNoCut(out)) out
-    else {
-      val pinned = Materialize.cutPinned(out)
-      Materialize.release(toks)
-      pinned
-    }
+    val pinned = Materialize.cutPinned(out)
+    Materialize.release(toks)
+    pinned
   }
 
   /** [[sharedRuns]] over a pre-tokenized (_id, toks) table. */
@@ -218,11 +215,8 @@ object SuffixRuns {
     val out = extended
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(max(col("w") + col("_left") + col("_right")).cast("int").as("run_len"))
-    if (Materialize.debugNoCut(out)) out
-    else {
-      val pinned = Materialize.cutPinned(out)
-      Materialize.release(toks)
-      pinned
-    }
+    val pinned = Materialize.cutPinned(out)
+    Materialize.release(toks)
+    pinned
   }
 }

@@ -148,9 +148,8 @@ object UnigramLm {
       .join(u1, Seq("piece"), "left")
       .select(col("piece"), (coalesce(col("n_uses"), lit(0L)) + 1L).as("cnt"))
     // round 2: re-segment under the re-estimated costs. Both returned
-    // tables are EAGER cuts before the intermediates are released —
-    // under the localCheckpoint policy a released generation cannot be
-    // recomputed through, so nothing may still need it lazily.
+    // tables are EAGER cuts before the intermediates are released, so
+    // nothing still needs them lazily.
     val seg2 = Materialize.cutEager(viterbiSeg(words, pieceCosts(v1), pieceLen))
     val u2 = if (!withUsage) None
     else Some(Materialize.cutEager(v1.select(col("piece"))
@@ -176,11 +175,8 @@ object UnigramLm {
     // vocab-sized result in one extra job wave purely to allow
     // release(u2)). seg2 is released: u2's checkpoint/persist no longer
     // needs it; u2 stays alive until the caller drops the result.
-    if (Materialize.debugNoCut(out)) out
-    else {
-      Materialize.release(seg2)
-      out
-    }
+    Materialize.release(seg2)
+    out
   }
 
   /** Encode the corpus with the trained tokenizer: per document, the
@@ -261,11 +257,8 @@ object UnigramLm {
     // No final pin: the caller's single action is the encode pass.
     // `seg` is an eager cut, so `words` can be released now; seg stays
     // alive until the caller drops the result.
-    if (Materialize.debugNoCut(out)) out
-    else {
-      Materialize.release(words)
-      out
-    }
+    Materialize.release(words)
+    out
   }
 
   /** Vocabulary-size TUNING CURVE: the tokenizer's fertility at each

@@ -67,18 +67,27 @@ object RawIssueSource {
   /** P9 per-row error isolation (reference etl.py:180-183 skips a failed
     * issue and continues): malformed source rows land on a bad-record side
     * channel instead of failing the batch — PERMISSIVE parse with a
-    * corrupt-record column, split into (good, bad).
+    * corrupt-record column, split into (good, bad) and passed to `f`.
+    *
+    * The parse is cached for the duration of `f` only: both branches read
+    * it (and Spark requires a cached parse to split on the corrupt-record
+    * column), and releasing it when `f` returns or throws means the next
+    * read of the same path parses the file again. A cache left behind
+    * would be matched by the next read's plan (file indexes compare
+    * equal by root path), which would then get the earlier rows.
     */
-  def jsonWithBadRecords(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
+  def withJsonBadRecords[A](spark: SparkSession, path: String)(f: (DataFrame, DataFrame) => A): A = {
     val schema = Schemas.rawIssue.add("_corrupt_record", "string")
     val parsed = spark.read
       .schema(schema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
-      .cache() // both branches read it; also required for corrupt-record splits
-    val good = parsed.where(col("_corrupt_record").isNull).drop("_corrupt_record")
-    val bad = parsed.where(col("_corrupt_record").isNotNull).select(col("_corrupt_record").as("raw"))
-    (good, bad)
+      .cache()
+    try {
+      val good = parsed.where(col("_corrupt_record").isNull).drop("_corrupt_record")
+      val bad = parsed.where(col("_corrupt_record").isNotNull).select(col("_corrupt_record").as("raw"))
+      f(good, bad)
+    } finally parsed.unpersist()
   }
 }

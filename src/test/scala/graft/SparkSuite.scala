@@ -1,6 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.graft.GraftBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,27 +35,63 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterEach {
     if (r.isNullAt(0)) null else r.get(0)
   }
 
+  /** `df`'s rows behind an RDD scan. Over a local relation the optimizer
+    * evaluates a cut's projection on the driver and caches the result as
+    * a `LocalTableScan`, so the cached plan would hold no expression to
+    * count.
+    */
+  def rddBacked(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
+
   /** Count physical reuse-read leaves in the executed plan TREE: cache
-    * reads (`InMemoryTableScanExec`, the persist policy) plus checkpoint
-    * reads (`RDDScanExec`, prints as "Scan ExistingRDD", the
-    * localCheckpoint policy). Tree counts, unlike plan-STRING counts,
-    * exclude the cached child plans `InMemoryRelation` prints inline — a
-    * cut whose own plan reads an earlier cut re-prints that read inside
-    * its relation dump even though it never re-executes, so string
+    * reads (`InMemoryTableScanExec`, a persist cut) plus checkpoint reads
+    * (`RDDScanExec`, prints as "Scan ExistingRDD", a `cutPinned` or
+    * `cutLoop` result). Tree counts, unlike plan-STRING counts, exclude
+    * the cached child plans `InMemoryRelation` prints inline — a cut
+    * whose own plan reads an earlier cut re-prints that read inside its
+    * relation dump even though it never re-executes, so string
     * occurrence counts overshoot the compute count.
     */
-  def reuseReads(df: org.apache.spark.sql.DataFrame): Int = {
-    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val root: SparkPlan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.inputPlan
-      case p => p
+  def reuseReads(df: DataFrame): Int =
+    SparkSuite.planNodes(planTree(df)).count {
+      case _: InMemoryTableScanExec | _: RDDScanExec => true
+      case _ => false
     }
-    root.collect {
-      case s: InMemoryTableScanExec => s: SparkPlan
-      case s: RDDScanExec => s: SparkPlan
-    }.size
+
+  /** The cache reads (`InMemoryTableScanExec`) in the executed plan TREE. */
+  def cacheReads(df: DataFrame): Seq[InMemoryTableScanExec] =
+    SparkSuite.planNodes(planTree(df)).collect { case s: InMemoryTableScanExec => s }
+
+  /** Occurrences of `needle` in the node strings of `plan`'s tree. A cache
+    * read is a leaf, so the cached plan it prints inline is not searched:
+    * pass `read.relation.cachedPlan` to search that.
+    */
+  def occurrences(plan: SparkPlan, needle: String): Int =
+    SparkSuite.planNodes(plan).map(p => needle.r.findAllIn(p.simpleString(Int.MaxValue)).size).sum
+
+  /** The root of `df`'s executed plan tree before AQE re-plans it. */
+  def planTree(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.inputPlan
+    case p => p
+  }
+
+  /** Every `QueryExecution` `f` completes, in completion order, with the
+    * action that ran it (`"localCheckpoint"`, `"command"`, …). Listener
+    * events arrive asynchronously, so the bus is drained before they are
+    * returned.
+    */
+  def executions(f: => Unit): Seq[(String, QueryExecution)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(funcName -> qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      GraftBridge.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
   }
 }
 
@@ -56,4 +99,13 @@ object SparkSuite {
   // four threads whatever SPARK_GRAFT_CPUS says, so test partitioning
   // does not depend on the machine
   lazy val session: SparkSession = Session.local(4)
+
+  /** Every node of an executed plan, descending into AQE's current plan
+    * and its query stages.
+    */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec => planNodes(s.plan)
+    case other => other.children.flatMap(planNodes)
+  })
 }

@@ -214,22 +214,10 @@ class DedupSpec extends SparkSuite {
 
   test("minHashPairs runs the shingle kernel once: all consumers read the shared cut") {
     // the candidate pipeline and both verification join sides must share
-    // the one materialized (id, shingle-hashes) pass. Pin the
-    // localCheckpoint policy so the count is a COMPUTE count: the cut
-    // truncates lineage, so the kernel appears NOWHERE in the plan (it
-    // lives inside the checkpointed RDD, computed once) and each reuse
-    // read prints as a Scan ExistingRDD. Under the persist default the
-    // InMemoryRelation keeps its child plan visible in the string (the
-    // kernel prints per reuse read even though it executes once), so
-    // occurrence counts would not measure computation.
-    spark.conf.set("spark.graft.materialize", "localCheckpoint")
-    try {
-      val plan = Dedup.minHashPairs(docs, "text", "doc_id")
-        .queryExecution.executedPlan.toString
-      def count(needle: String): Int = needle.r.findAllIn(plan).size
-      assert(count("shingle_hashes") == 0, s"shingle kernel recomputed per consumer:\n$plan")
-      assert(count("Scan ExistingRDD") == 3, s"expected 3 reads of the shared checkpoint:\n$plan")
-    } finally spark.conf.unset("spark.graft.materialize")
+    // the one materialized (id, shingle-hashes) pass: the scoring tree
+    // holds no kernel call, three cache reads of one relation, and the
+    // kernel once inside that relation's cached plan
+    assertSharedKernelCut(Dedup.minHashPairs(rddBacked(docs), "text", "doc_id"), "shingle_hashes")
   }
 
   test("ngramContamination broadcasts the probe side and never sort-merge-joins") {
@@ -245,18 +233,23 @@ class DedupSpec extends SparkSuite {
     val vecs = (0 until 40)
       .map(i => (i.toLong, (1 to 8).map(j => (i * j % 7).toFloat)))
       .toDF("vec_id", "embedding")
-    // localCheckpoint policy pinned for the same reason as the
-    // minHashPairs test above: only a truncating cut makes occurrence
-    // counts equal compute counts.
-    spark.conf.set("spark.graft.materialize", "localCheckpoint")
-    try {
-      val plan = Dedup.semanticDedup(vecs, "vec_id", "embedding", dim = 8,
-        cells = 4, sampleN = 40, iters = 2)
-        .queryExecution.executedPlan.toString
-      def count(needle: String): Int = needle.r.findAllIn(plan).size
-      assert(count("nearest_centroid") == 0, s"assignment kernel recomputed per consumer:\n$plan")
-      assert(count("Scan ExistingRDD") == 3, s"expected 3 reads of the shared checkpoint:\n$plan")
-    } finally spark.conf.unset("spark.graft.materialize")
+    assertSharedKernelCut(Dedup.semanticDedup(rddBacked(vecs), "vec_id", "embedding", dim = 8,
+      cells = 4, sampleN = 40, iters = 2), "nearest_centroid")
+  }
+
+  /** `kernel` runs once for all of `df`'s consumers: absent from the plan
+    * tree, which reads one cached relation three times, and called once
+    * inside that relation's cached plan.
+    */
+  private def assertSharedKernelCut(df: DataFrame, kernel: String): Unit = {
+    val plan = df.queryExecution.executedPlan
+    assert(occurrences(planTree(df), kernel) == 0, s"$kernel recomputed per consumer:\n$plan")
+    val reads = cacheReads(df).filter(r => occurrences(r.relation.cachedPlan, kernel) > 0)
+    assert(reads.size == 3, s"expected 3 reads of the shared cut, got ${reads.size}:\n$plan")
+    assert(reads.map(_.relation.cacheBuilder).distinct.size == 1,
+      s"the reads hit more than one cached relation:\n$plan")
+    assert(occurrences(reads.head.relation.cachedPlan, kernel) == 1,
+      s"$kernel called more than once in the cut:\n${reads.head.relation.cachedPlan}")
   }
 
   test("native simhash equals the explode+aggregate reference form") {

@@ -70,13 +70,25 @@ class RetrievalSpec extends SparkSuite {
     // aggregate feeds the scoring join AND the df aggregate (2 reads),
     // the token projection feeds the length stats (1 read — its postings
     // consumer lives in the cut's materialization job, not the scoring
-    // plan). Nobody rebuilds corpus lineage. `reuseReads` counts cache
-    // AND checkpoint scan nodes, so the assertion survives either
-    // materialize policy, and counts tree nodes rather than string
-    // occurrences so the inline cached-plan dumps of nested cuts don't
-    // inflate it.
+    // plan). Nobody rebuilds corpus lineage. `reuseReads` counts tree
+    // nodes rather than string occurrences so the inline cached-plan
+    // dumps of nested cuts don't inflate it.
     assert(reuseReads(df) == 3,
       s"expected 3 materialized-reuse reads in the scoring plan, got ${reuseReads(df)}:\n$plan")
+  }
+
+  test("bm25 under the default persist policy reads the cut, not fresh lineage") {
+    val corpus = (0 until 50).map(i => (i.toLong, s"w$i common x${i % 5} y${i % 3}")).toDF("doc_id", "text")
+    val queries = Seq((1000L, "common x0")).toDF("query_id", "text")
+    val df = Retrieval.bm25TopK(corpus, queries, k = 5)
+    val plan = df.queryExecution.executedPlan.toString
+    // every reuse point surfaces as a cache read: the three cut reads of
+    // the broadcast test (tree count — the string also shows the nested
+    // cuts' cached plans), with no checkpoint RDD scans anywhere
+    assert(reuseReads(df) == 3,
+      s"expected 3 cache-read nodes under persist, got ${reuseReads(df)}:\n$plan")
+    assert(!plan.contains("Scan ExistingRDD"),
+      s"unexpected checkpoint read under persist policy:\n$plan")
   }
 
   test("tfidfTopTerms matches brute-force tf*ln(N/df) with term tie-break") {
@@ -134,38 +146,17 @@ class RetrievalSpec extends SparkSuite {
   }
 
   test("bm25 tokenizes the corpus exactly once (materialized projection)") {
-    val corpus = (0 until 50).map(i => (i.toLong, s"w$i common x${i % 5} y${i % 3}")).toDF("doc_id", "text")
-    val queries = Seq((1000L, "common x0")).toDF("query_id", "text")
-    // Pin the localCheckpoint policy: its plan truncates lineage at the
-    // cut, so "the corpus split appears exactly once" is directly
-    // countable. Under persist the InMemoryRelation keeps its child plan
-    // visible in the string (the split prints per reuse read even though
-    // it executes once), so the occurrence count is not a compute count.
-    spark.conf.set("spark.graft.materialize", "localCheckpoint")
-    try {
-      val plan = Retrieval.bm25TopK(corpus, queries, k = 5)
-        .queryExecution.executedPlan.toString
-      // the corpus-side regex split runs ONCE, materializing the token
-      // cut — the scoring plan reads the cut and the only split left is
-      // the (tiny) broadcast query side
-      val splits = "split\\(lower\\(trim\\(text".r.findAllIn(plan).size
-      assert(splits == 1,
-        s"expected exactly 1 split (query side) in the scoring plan, got $splits:\n$plan")
-    } finally spark.conf.unset("spark.graft.materialize")
-  }
-
-  test("bm25 under the default persist policy reads the cut, not fresh lineage") {
-    val corpus = (0 until 50).map(i => (i.toLong, s"w$i common x${i % 5} y${i % 3}")).toDF("doc_id", "text")
+    val corpus = rddBacked(
+      (0 until 50).map(i => (i.toLong, s"w$i common x${i % 5} y${i % 3}")).toDF("doc_id", "text"))
     val queries = Seq((1000L, "common x0")).toDF("query_id", "text")
     val df = Retrieval.bm25TopK(corpus, queries, k = 5)
-    val plan = df.queryExecution.executedPlan.toString
-    // every reuse point surfaces as a cache read: the three cut reads of
-    // the broadcast test (tree count — the string also shows the nested
-    // cuts' cached plans), with no checkpoint RDD scans anywhere
-    assert(reuseReads(df) == 3,
-      s"expected 3 cache-read nodes under persist, got ${reuseReads(df)}:\n$plan")
-    assert(!plan.contains("Scan ExistingRDD"),
-      s"unexpected checkpoint read under persist policy:\n$plan")
+    // the corpus-side regex split runs ONCE, materializing the token
+    // cut — the scoring plan tree reads the cut (a leaf; its cached plan
+    // is not part of the tree) and the only split left is the (tiny)
+    // broadcast query side
+    val splits = occurrences(planTree(df), "split\\(lower\\(trim\\(text")
+    assert(splits == 1, s"expected exactly 1 split (query side) in the scoring plan, got $splits:\n" +
+      df.queryExecution.executedPlan)
   }
 
   test("rrfFuse matches hand-computed reciprocal rank fusion, docs in one list only included") {

@@ -490,20 +490,23 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("lloydKMeans broadcasts the centroid table (no corpus-side shuffle to score)") {
-    // policy `none` leaves the plan uncut so the scoring join is visible
-    // in the returned frame (the default pins the result behind a cache
-    // read); the loop's centroid generations still truncate via cutLoop
+    // the returned frame is the pinned result, so the scoring join is
+    // read from the executed plan of the action that pinned it: the
+    // localCheckpoint producing (cluster, n_members, inertia_fp)
     val df = (0 until 30).map(i =>
       (i.toLong, Seq.tabulate(4)(d => (i * 7 + d).toFloat)))
       .toDF("vec_id", "embedding")
-    spark.conf.set("spark.graft.materialize", "none")
-    try {
-      val plan = Similarity.lloydKMeans(df, "embedding", "vec_id", k = 2, iters = 2)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),
-        plan)
-      assert(!plan.contains("CartesianProduct"), plan)
-    } finally spark.conf.unset("spark.graft.materialize")
+    val pins = executions {
+      Similarity.lloydKMeans(df, "embedding", "vec_id", k = 2, iters = 2)
+    }.collect {
+      case ("localCheckpoint", qe) if qe.analyzed.output.map(_.name) ==
+          Seq("cluster", "n_members", "inertia_fp") => qe.executedPlan.toString
+    }
+    assert(pins.size == 1, s"expected one pinning action, got ${pins.size}")
+    val plan = pins.head
+    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),
+      plan)
+    assert(!plan.contains("CartesianProduct"), plan)
   }
 
   test("maxSimTopK: hand-computed MaxSim scores, tie broken by doc id") {

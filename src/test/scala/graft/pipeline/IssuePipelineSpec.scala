@@ -6,8 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
@@ -16,9 +15,9 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftBridge
 import org.apache.spark.sql.types.{StructField, StructType}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSuite
+import graft.SparkSuite.planNodes
 import graft.schema.{EngineConfig, Schemas}
 import graft.sinks.{BucketedTableSink, ClickHouseBatchSink, ConsoleSink, ParquetSink, Sink, SinksSpec}
 import graft.state.MemoryStateStore
@@ -413,35 +412,16 @@ class IssuePipelineSpec extends SparkSuite {
     }
   }
 
-  /** Every node of an executed plan, descending into AQE's final plan and
-    * its query stages.
-    */
-  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
-    case s: QueryStageExec => planNodes(s.plan)
-    case other => other.children.flatMap(planNodes)
-  })
-
   /** The executed plan of each file write `f` runs, by output directory
-    * name. Listener events arrive asynchronously, so the bus is drained
-    * before the plans are read.
+    * name.
     */
-  private def writePlans(f: => Unit): Map[String, SparkPlan] = {
-    val plans = scala.collection.concurrent.TrieMap[String, SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        planNodes(qe.executedPlan).collectFirst {
-          case DataWritingCommandExec(cmd: InsertIntoHadoopFsRelationCommand, _) => cmd.outputPath.getName
-        }.foreach(plans.put(_, qe.executedPlan))
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      f
-      GraftBridge.drainListenerBus(spark)
-    } finally spark.listenerManager.unregister(listener)
-    plans.toMap
-  }
+  private def writePlans(f: => Unit): Map[String, SparkPlan] =
+    executions(f).flatMap { case (_, qe) =>
+      planNodes(qe.executedPlan).collectFirst {
+        case DataWritingCommandExec(cmd: InsertIntoHadoopFsRelationCommand, _) =>
+          cmd.outputPath.getName -> qe.executedPlan
+      }
+    }.toMap
 
   test("each issue's rows are clustered on issue_key: one changelog file, one shuffle per table") {
     // coalescing off, so the 4 shuffle partitions become 4 files and a key

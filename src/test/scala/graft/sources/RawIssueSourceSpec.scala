@@ -2,7 +2,13 @@ package graft.sources
 
 import java.nio.file.Files
 
+import scala.collection.mutable
+
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSuite
+import graft.examples.ServerlessHandler
+import graft.sinks.Sink
 
 class RawIssueSourceSpec extends SparkSuite {
 
@@ -13,13 +19,36 @@ class RawIssueSourceSpec extends SparkSuite {
         |this is not json at all {{{
         |{"key":"A-2","summary":"also ok","queue":{"key":"A"},"createdAt":"2024-01-09T10:00:00.000+0000","updatedAt":"2024-01-09T12:00:00.000+0000","changelog":[]}
         |""".stripMargin)
-    val (good, bad) = RawIssueSource.jsonWithBadRecords(spark, f.toString)
-    assert(good.count() == 2)
-    assert(bad.count() == 1)
-    assert(bad.collect()(0).getString(0).contains("not json"))
-    // the good side is transformable end-to-end
-    val issues = graft.transform.IssueTransform.issues(good)
-    assert(issues.count() == 2)
+    RawIssueSource.withJsonBadRecords(spark, f.toString) { (good, bad) =>
+      assert(good.count() == 2)
+      assert(bad.count() == 1)
+      assert(bad.collect()(0).getString(0).contains("not json"))
+      // the good side is transformable end-to-end
+      val issues = graft.transform.IssueTransform.issues(good)
+      assert(issues.count() == 2)
+    }
+  }
+
+  test("a warm session re-reading a rewritten JSON source exports the new documents") {
+    def doc(key: String) =
+      s"""{"key":"$key","summary":"s","queue":{"key":"A"},"createdAt":"2024-01-09T10:00:00.000+0000",""" +
+        s""""updatedAt":"2024-01-09T11:00:00.000+0000","changelog":[]}"""
+    val f = Files.createTempFile("raw", ".ndjson")
+    val exported = mutable.Buffer[Seq[String]]()
+    val capture = new Sink {
+      def write(df: DataFrame, table: String): Unit =
+        if (table == "issues") exported += df.select("issue_key").collect().map(_.getString(0)).toSeq.sorted
+    }
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    val keys = Seq(3, 7).map(n => (1 to n).map(i => s"A-$i"))
+    for (batch <- keys) {
+      Files.writeString(f, batch.map(doc).mkString("", "\n", "\n"))
+      assert(ServerlessHandler.handler(Map("raw" -> f.toString), spark, capture) ==
+        ServerlessHandler.Response(200, "success"))
+    }
+    assert(exported == keys)
+    assert(sc.getPersistentRDDs.keySet == persistedBefore)
   }
 
   test("REST adapter skeleton: drains pages until exhaustion, parses distributed, transform-ready") {
