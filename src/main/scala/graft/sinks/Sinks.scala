@@ -14,10 +14,10 @@ trait Sink extends Serializable {
   def write(df: DataFrame, table: String): Unit
 }
 
-/** The one parquet encoding of every parquet-writing sink: zstd pages,
-  * INT64 `TIMESTAMP_MICROS` timestamps, and timestamp columns written
-  * PLAIN. The reference stores its `DateTime64(3, 'UTC')` columns as
-  * 8-byte integers in compressed ClickHouse parts. Spark's defaults are
+/** The one parquet encoding of every parquet-writing sink: zstd level-9
+  * pages, INT64 `TIMESTAMP_MICROS` timestamps, and timestamp columns
+  * written PLAIN. The reference stores its `DateTime64(3, 'UTC')` columns
+  * as 8-byte integers in compressed ClickHouse parts. Spark's defaults are
   * snappy pages and the deprecated 12-byte INT96 timestamp, which parquet
   * cannot dictionary- or delta-encode; those columns were 41 % of a
   * backfill export, and the two changes cut bytes per exported issue by a
@@ -31,20 +31,44 @@ trait Sink extends Serializable {
   * 711,009 B of 2,816,033 B, and 406,107 B written PLAIN (the export
   * −10.8 %). So every top-level `TimestampType` / `TimestampNTZType`
   * column gets `parquet.enable.dictionary#<column>` = false; every other
-  * column keeps the dictionary. All of this is constant, not an option.
+  * column keeps the dictionary.
   *
-  * Compression and the dictionary are writer options. The timestamp type
-  * is not: Spark reads it only from the session conf, so the conf is set
-  * for the one write and the caller's value restored (or unset)
-  * afterwards, also when the write throws.
+  * Pages are zstd level 9, not Spark's default level 3. Each of the 7
+  * data files of a seed-4 `etlbench` backfill export, rewritten on its own
+  * with everything else fixed, totalled 2,462,618 B at level 3,
+  * 2,413,201 B at 6 (−2.0 %), 2,382,781 B at 9 (−3.2 %), 2,370,649 B at
+  * 12 (−3.7 %) and 2,232,660 B at 19 (−9.3 %). Levels 3 to 9 rewrote in
+  * the same 2–3.5 s, 12 took 9.6 s and 19 took 12.7 s, so 9 is the knee.
+  * zstd decompresses at the same speed whatever the level, so readers
+  * pay nothing. The price is compression CPU (0.12 → 0.21 CPU-s for that
+  * export's three tables, pyarrow on one thread), and `etlbench`'s peak
+  * RSS read 1.4–3.0 % higher. All of this is constant, not an option.
+  *
+  * Tried on the same export and rejected: parquet v2 pages (−0.4 %; delta
+  * encoding shrinks the `issues` and `issue_metrics` timestamps ~17 % but
+  * grows `issues_changelog.event_time` from 394 to 451 KB);
+  * `BYTE_STREAM_SPLIT` (this write path does not apply it to INT64, and
+  * the float `story_points` grows); 8 MB pages (+0.3 %) and 8 MB
+  * dictionary pages (±0); no page checksums with 1-byte column-index
+  * truncation (−0.1 %); changelog rows ordered (issue_key, changed_field,
+  * event_time) (+3.3 %) or by changed_field first (+15.7 %), and
+  * `issue_metrics` sorted by its DDL key (±0) — the DDL order the dedup's
+  * sort already produces is the smallest; `TIMESTAMP_MILLIS`, which would
+  * drop the microseconds the round-trip keeps.
+  *
+  * Compression, its level and the dictionary are writer options. The
+  * timestamp type is not: Spark reads it only from the session conf, so
+  * the conf is set for the one write and the caller's value restored (or
+  * unset) afterwards, also when the write throws.
   */
 private[sinks] object ParquetEncoding {
   private val TimestampTypeKey = "spark.sql.parquet.outputTimestampType"
+  private val ZstdLevel = "9"
 
   /** One `parquet.enable.dictionary#<column>` = false per top-level
     * timestamp column of `schema`.
     */
-  private def plainTimestamps(schema: StructType): Map[String, String] =
+  private[sinks] def plainTimestamps(schema: StructType): Map[String, String] =
     schema.fields.collect {
       case f if f.dataType == TimestampType || f.dataType == TimestampNTZType =>
         s"parquet.enable.dictionary#${f.name}" -> "false"
@@ -56,7 +80,9 @@ private[sinks] object ParquetEncoding {
     // built-in default and turn an unset key into a set one
     val callers = conf.getAll.get(TimestampTypeKey)
     conf.set(TimestampTypeKey, "TIMESTAMP_MICROS")
-    try save(df.write.option("compression", "zstd").options(plainTimestamps(df.schema)))
+    try save(df.write.option("compression", "zstd")
+      .option("parquet.compression.codec.zstd.level", ZstdLevel)
+      .options(plainTimestamps(df.schema)))
     finally callers match {
       case Some(v) => conf.set(TimestampTypeKey, v)
       case None => conf.unset(TimestampTypeKey)
@@ -65,7 +91,7 @@ private[sinks] object ParquetEncoding {
 }
 
 /** Parquet sink for tests/goldens and offline corpora; pages are zstd
-  * and timestamps plain INT64 micros (see [[ParquetEncoding]]).
+  * level 9 and timestamps plain INT64 micros (see [[ParquetEncoding]]).
   */
 final class ParquetSink(baseDir: String) extends Sink {
   def write(df: DataFrame, table: String): Unit =
@@ -85,7 +111,7 @@ final class ParquetSink(baseDir: String) extends Sink {
   * Both sides must agree on bucket COUNT and key (the Spark bucketing
   * contract); `spark.sql.sources.bucketing.enabled` (default true) and
   * AQE leave bucketed scans un-coalesced. Files are encoded like
-  * [[ParquetSink]]'s: zstd pages, plain INT64 micros timestamps.
+  * [[ParquetSink]]'s: zstd level-9 pages, plain INT64 micros timestamps.
   */
 final class BucketedTableSink(buckets: Int, keys: Seq[String]) extends Sink {
   def write(df: DataFrame, table: String): Unit =

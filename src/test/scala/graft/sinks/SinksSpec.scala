@@ -12,7 +12,7 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.functions.{col, explode, lit, raise_error, sequence, when}
 
 import graft.SparkSuite
@@ -198,6 +198,59 @@ class SinksSpec extends SparkSuite {
       val files = spark.table("sink_spec_stamped").inputFiles.toSeq
       assert(assertEncoding(files) == Set("updated_at", "closed_at"))
     } finally spark.sql("DROP TABLE IF EXISTS sink_spec_stamped")
+  }
+
+  // 20k seeded rows of words and timestamps, in the local relation's
+  // fixed split: enough page bytes for the zstd level to show in the size
+  private lazy val compressible: DataFrame = {
+    val rnd = new scala.util.Random(12)
+    val words = Vector.fill(500)(rnd.alphanumeric.take(3 + rnd.nextInt(8)).mkString.toLowerCase)
+    val start = ts("2024-01-01 00:00:00").getTime
+    (0 until 20000).map { i =>
+      (s"K-${i % 4000}",
+        Seq.fill(4 + rnd.nextInt(12))(words(rnd.nextInt(words.size))).mkString(" "),
+        new Timestamp(start + rnd.nextInt(90 * 86400) * 1000L + rnd.nextInt(1000)))
+    }.toDF("issue_key", "text", "updated_at")
+  }
+
+  /** `df.write` with everything [[ParquetEncoding]] sets but the zstd
+    * level, which stays Spark's default.
+    */
+  private def defaultLevel(df: DataFrame)(save: DataFrameWriter[Row] => Unit): Unit =
+    withTsConf(Some("TIMESTAMP_MICROS")) {
+      save(df.write.option("compression", "zstd").options(ParquetEncoding.plainTimestamps(df.schema)))
+    }
+
+  private def bytes(files: Seq[String]): Long = {
+    assert(files.nonEmpty)
+    files.map { f =>
+      val p = new Path(f)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).getLen
+    }.sum
+  }
+
+  // parquet records the codec but not its level, so the size is the check
+  test("both sinks write smaller files than zstd at Spark's default level") {
+    val dir = tempDir("graft-level")
+    new ParquetSink(dir).write(compressible, "t")
+    defaultLevel(compressible)(_.parquet(s"$dir/default"))
+    val (sink, default) =
+      (spark.read.parquet(s"$dir/t").inputFiles, spark.read.parquet(s"$dir/default").inputFiles)
+    assert(sink.length == default.length)
+    assert(bytes(sink) < bytes(default), s"ParquetSink ${bytes(sink)} B vs default level ${bytes(default)} B")
+    try {
+      new BucketedTableSink(buckets = 2, keys = Seq("issue_key")).write(compressible, "sink_spec_level")
+      defaultLevel(compressible)(_.bucketBy(2, "issue_key").sortBy("issue_key")
+        .format("parquet").saveAsTable("sink_spec_level_default"))
+      val (bucketed, bucketedDefault) =
+        (spark.table("sink_spec_level").inputFiles, spark.table("sink_spec_level_default").inputFiles)
+      assert(bucketed.length == bucketedDefault.length)
+      assert(bytes(bucketed) < bytes(bucketedDefault),
+        s"BucketedTableSink ${bytes(bucketed)} B vs default level ${bytes(bucketedDefault)} B")
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS sink_spec_level")
+      spark.sql("DROP TABLE IF EXISTS sink_spec_level_default")
+    }
   }
 
   test("ParquetSink round-trips rows exactly, null timestamps included") {
