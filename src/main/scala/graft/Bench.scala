@@ -256,25 +256,6 @@ object Bench {
       s""","loadavg":$l"""
     } catch { case NonFatal(_) => "" }
     println(s"""{"metric":"total","value":$total,"unit":"sec","timing":"best-of-2","queries":$qs,"sf":"$sfDir"$loadAvg$canaryJson}""")
-    // The named per-query line above is ~3.5 KB for 108 queries; the
-    // driver's artifact keeps only the LAST 2000 bytes of output, so its
-    // head truncates (round 8 captured 63/108 names). The query NAMES
-    // alone are 1.6 KB, so no named encoding can ever fit — instead emit
-    // a compact values-only line: seconds (3 decimals, -1.0 = failed)
-    // for the registry keys sorted lexicographically. A consumer
-    // reconstructs names by sorting SparkEntry.queries.keys (the same
-    // names CORRECTNESS_r*.json lists); documented in SCALING.md.
-    val byName = best.map { case (n, s, r1, r2, _) => n -> ((s, r1, r2)) }.toMap
-    val namesSorted = byName.keys.toSeq.sorted
-    val vAlpha = namesSorted.map(n => f"${byName(n)._1}%.3f").mkString("[", ",", "]")
-    // RAW best-of-2 pairs, same key-sorted order — the per-query steal
-    // evidence (see the once() comment). Emitted BEFORE queries_alpha
-    // so the more-derived line sits closer to the surviving tail.
-    val vRaw = namesSorted.map { n =>
-      val (_, r1, r2) = byName(n); f"[$r1%.3f,$r2%.3f]"
-    }.mkString("[", ",", "]")
-    println(s"""{"metric":"queries_raw_alpha","unit":"sec","order":"keys-sorted","n":${results.size},"v":$vRaw}""")
-    println(s"""{"metric":"queries_alpha","unit":"sec","order":"keys-sorted","n":${results.size},"v":$vAlpha}""")
     // The FULL per-query evidence (names + raw pairs + canary readings)
     // also lands in a file: the driver's artifact keeps only a 2 KB
     // stdout tail, which cannot hold 341 named entries.
@@ -288,13 +269,12 @@ object Bench {
     } catch { case NonFatal(e) => System.err.println(s"[bench] bench-full.json write failed: $e") }
     // The driver-readable NAMED per-query line (round-14 verdict item 1:
     // PERF_r14 had per_query empty because the only named map rode the
-    // FIRST stdout line, outside the driver's 2 KB tail, and the
-    // values-only alpha lines need a sorted-keys convention the driver
-    // does not apply). One line, exactly the prescribed shape
+    // FIRST stdout line, outside the driver's 2 KB tail). One line,
+    // exactly the prescribed shape
     // {"metric":"queries","v":{name:sec,...}} — emitted immediately
     // before total_only so a full-stream line scan finds it; total_only
     // stays LAST so the tail's final JSON line still carries the total.
-    val vNamed = namesSorted.map(n => "\"" + n + "\":" + f"${byName(n)._1}%.3f")
+    val vNamed = best.sortBy(_._1).map { case (n, s, _, _, _) => f""""$n":$s%.3f""" }
       .mkString("{", ",", "}")
     println(s"""{"metric":"queries","unit":"sec","n":${results.size},"v":$vNamed}""")
     // Slowest queries with their raw pairs ride the TRAILER so the

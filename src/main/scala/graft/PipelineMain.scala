@@ -2,11 +2,10 @@ package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 import graft.pipeline.{IntervalScheduler, IssuePipeline}
 import graft.schema.{EngineConfig, EnvFile}
 import graft.sinks.{ConsoleSink, ParquetSink}
+import graft.sources.RawIssueSource
 import graft.state.StateStore
 
 /** CLI entry ≙ the reference's `tracker-exporter` (main.py:127-147):
@@ -87,7 +86,7 @@ object PipelineMain {
     System.err.println(s"[pipeline] scan mode: $mode")
 
     def runBatch(): Unit = {
-      val stats = withRaw(spark, rawPath)(IssuePipeline.run(_, cfg, sink, state))
+      val stats = RawIssueSource.withFile(spark, rawPath)(IssuePipeline.run(_, cfg, sink, state))
       println(s"[pipeline] issues=${stats.issuesProcessed} metrics=${stats.metricsRows} " +
         s"changelog=${stats.changelogRows} no_metrics=${stats.issuesWithoutMetrics} " +
         s"watermark=${stats.newWatermark.getOrElse("-")} uploaded=${stats.uploaded}")
@@ -138,19 +137,4 @@ object PipelineMain {
     reporter.close()
     spark.stop()
   }
-
-  /** P9: malformed JSON rows go to a bad-record side channel instead of
-    * failing the batch (reference skips-and-logs per issue,
-    * etl.py:180-183). Re-read per daemon tick, and the JSON parse is
-    * released when `f` returns, so a file refreshed between ticks is
-    * picked up.
-    */
-  private def withRaw[A](spark: SparkSession, rawPath: String)(f: DataFrame => A): A =
-    if (rawPath.endsWith(".json") || rawPath.endsWith(".ndjson"))
-      graft.sources.RawIssueSource.withJsonBadRecords(spark, rawPath) { (good, bad) =>
-        val nBad = bad.count()
-        if (nBad > 0) System.err.println(s"[pipeline] $nBad malformed source rows skipped")
-        f(good)
-      }
-    else f(spark.read.parquet(rawPath))
 }

@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.pipeline.{ErrorReporting, IssuePipeline}
 import graft.schema.EngineConfig
@@ -35,10 +35,7 @@ object ServerlessHandler {
     try {
       val rawPath = event.getOrElse("raw",
         throw new IllegalArgumentException("event must carry a 'raw' input path"))
-      def run(raw: DataFrame) = IssuePipeline.run(raw, cfg, sink, state)
-      if (rawPath.endsWith(".json") || rawPath.endsWith(".ndjson"))
-        RawIssueSource.withJsonBadRecords(spark, rawPath)((good, _) => run(good))
-      else run(spark.read.parquet(rawPath))
+      RawIssueSource.withFile(spark, rawPath)(IssuePipeline.run(_, cfg, sink, state))
       Response(200, "success") // ≙ serverless/main.py:10-11
     } catch {
       case scala.util.control.NonFatal(exc) =>

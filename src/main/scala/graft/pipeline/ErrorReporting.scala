@@ -1,8 +1,10 @@
 package graft.pipeline
 
 import java.io.{PrintWriter, StringWriter}
-import java.net.{HttpURLConnection, URI}
-import java.nio.charset.StandardCharsets
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
+import graft.sinks.HttpTransport
 
 /** Pluggable error-report hook ≙ the reference's Sentry integration
   * (main.py:70-80: `sentry_sdk.init(dsn, release=appname@version,
@@ -77,15 +79,21 @@ object ErrorReporting {
     * store-endpoint SHAPE (release, fingerprint, exception type,
     * message, stacktrace, extra context) against any URL, so a real
     * deployment points it at a relay and tests point it at a loopback
-    * stub (the [[graft.sinks.ClickHouseHttpTransport]] discipline).
-    * Reporting failures are swallowed to stderr: the error path must
-    * never mask the original pipeline error.
+    * stub. Jackson writes the envelope, so any message (quotes, control
+    * characters, non-ASCII) stays valid JSON; the POST goes through
+    * [[graft.sinks.HttpTransport]], the same wire the ClickHouse client
+    * uses (a non-2xx answer is an `IOException`). Reporting failures are
+    * swallowed to stderr: the error path must never mask the original
+    * pipeline error.
     */
   final class HttpErrorReporter(url: String,
                                 connectTimeoutMs: Int = 5000,
                                 readTimeoutMs: Int = 5000) extends ErrorReporter {
+    private val transport = new HttpTransport(url,
+      connectTimeoutMs = connectTimeoutMs, readTimeoutMs = readTimeoutMs)
+
     def report(event: ReportEvent): Unit =
-      try post(toJson(event))
+      try transport(toJson(event))
       catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[error-report] delivery failed (${e.getMessage}); " +
@@ -93,39 +101,21 @@ object ErrorReporting {
       }
 
     private[pipeline] def toJson(event: ReportEvent): String = {
-      def q(s: String): String =
-        "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-          .replace("\n", "\\n").replace("\r", "\\r").replace("\t", "\\t") + "\""
       val sw = new StringWriter()
       event.error.printStackTrace(new PrintWriter(sw))
-      val ctx = event.context.toSeq.sorted
-        .map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString(",")
-      s"""{"release":${q(event.release)},"fingerprint":[${q(event.fingerprint)}],""" +
-        s""""exception":{"type":${q(event.error.getClass.getName)},""" +
-        s""""value":${q(String.valueOf(event.error.getMessage))},""" +
-        s""""stacktrace":${q(sw.toString.take(8192))}},"extra":{$ctx}}"""
-    }
-
-    private def post(body: String): Unit = {
-      val conn = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
-      try {
-        conn.setRequestMethod("POST")
-        conn.setConnectTimeout(connectTimeoutMs)
-        conn.setReadTimeout(readTimeoutMs)
-        conn.setDoOutput(true)
-        conn.setRequestProperty("Content-Type", "application/json")
-        val bytes = body.getBytes(StandardCharsets.UTF_8)
-        conn.setFixedLengthStreamingMode(bytes.length)
-        val out = conn.getOutputStream
-        try { out.write(bytes); out.flush() } finally out.close()
-        val code = conn.getResponseCode
-        if (code < 200 || code >= 300)
-          throw new java.io.IOException(s"error-report HTTP $code")
-        // drain so keep-alive can reuse the connection
-        Option(conn.getInputStream).foreach(s => try s.readAllBytes() finally s.close())
-      } finally conn.disconnect()
+      val root = json.createObjectNode().put("release", event.release)
+      root.putArray("fingerprint").add(event.fingerprint)
+      root.putObject("exception")
+        .put("type", event.error.getClass.getName)
+        .put("value", String.valueOf(event.error.getMessage))
+        .put("stacktrace", sw.toString.take(8192))
+      val extra = root.putObject("extra")
+      event.context.toSeq.sorted.foreach { case (k, v) => extra.put(k, v) }
+      json.writeValueAsString(root)
     }
   }
+
+  private val json = new ObjectMapper()
 
   /** ≙ configure_sentry (main.py:70-80): enabled + URL → HTTP reporter,
     * enabled without URL is a configuration error (the reference

@@ -4,13 +4,17 @@ import java.io.{ByteArrayOutputStream, InputStream}
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
-/** The real ClickHouse HTTP wire ≙ `ClickhouseClient.execute`
+/** The one HTTP POST of the service adapters. For ClickHouse it is the
+  * real wire ≙ `ClickhouseClient.execute`
   * (services/clickhouse.py:72-107): the SQL statement POSTed as the raw
   * request body to `http://host:port/`, identity via the
   * `X-Clickhouse-User` / `X-Clickhouse-Key` headers
-  * (services/clickhouse.py:47-54), non-2xx → exception (which the
-  * caller's [[Retry.withBackoff]] treats as retryable, mirroring the
-  * reference's `@backoff` on ConnectionError/Timeout).
+  * (services/clickhouse.py:47-54), sent only when `user` / `password`
+  * are given; non-2xx → `IOException` (which the caller's
+  * [[Retry.withBackoff]] treats as retryable, mirroring the reference's
+  * `@backoff` on ConnectionError/Timeout). The error reporter
+  * ([[graft.pipeline.ErrorReporting.HttpErrorReporter]]) POSTs its JSON
+  * envelope through the same class, with no identity headers.
   *
   * Plugs into [[ClickHouseClient]] / [[ClickHouseBatchSink]] as their
   * `String => String` / `String => Unit` transport. Serializable on
@@ -27,7 +31,7 @@ import java.nio.charset.StandardCharsets
   * retrying it is the difference between a nightly batch surviving a
   * rolling restart and paging someone.
   */
-final class ClickHouseHttpTransport(
+final class HttpTransport(
     url: String,
     user: Option[String] = None,
     password: Option[String] = None,
@@ -51,7 +55,7 @@ final class ClickHouseHttpTransport(
       val code = conn.getResponseCode
       if (code < 200 || code >= 300) {
         val err = readAll(Option(conn.getErrorStream))
-        throw new java.io.IOException(s"ClickHouse HTTP $code: $err")
+        throw new java.io.IOException(s"HTTP $code: $err")
       }
       readAll(Option(conn.getInputStream))
     } finally conn.disconnect()

@@ -21,18 +21,13 @@ object RawIssueSource {
     def load(spark: SparkSession): DataFrame = spark.read.parquet(path)
   }
 
-  final case class Json(path: String) extends RawIssueSource {
-    def load(spark: SparkSession): DataFrame =
-      spark.read.schema(Schemas.rawIssue).json(path)
-  }
-
   /** Live REST adapter skeleton — S1's online path (reference
     * services/tracker.py:50-67) behind the same seam. Transport is
     * INJECTED: `fetchPage(page, perPage)` returns one page of raw-issue
     * JSON documents, None or empty = exhausted. This container has zero
     * egress, so no HTTP client ships here; a production impl binds
     * fetchPage to the tracker's search endpoint with retry/backoff (the
-    * engine's backoff discipline lives in graft.sinks.Sinks.withRetry).
+    * engine's backoff discipline lives in [[graft.sinks.Retry.withBackoff]]).
     *
     * Scale notes: the page loop is driver-side BY NECESSITY (a paged
     * search API is a sequential cursor), and the accumulation is bounded
@@ -63,6 +58,22 @@ object RawIssueSource {
         spark.createDataset(docs).repartition(spark.sparkContext.defaultParallelism))
     }
   }
+
+  /** The raw-issue file at `path`, passed to `f`: newline-delimited JSON
+    * (`.json` / `.ndjson`) through [[withJsonBadRecords]], whose
+    * malformed rows are counted to stderr and skipped; anything else is
+    * read as [[Parquet]]. Read afresh on every call, and the JSON parse
+    * is released when `f` returns, so a file refreshed between daemon
+    * ticks or serverless invocations is picked up.
+    */
+  def withFile[A](spark: SparkSession, path: String)(f: DataFrame => A): A =
+    if (path.endsWith(".json") || path.endsWith(".ndjson"))
+      withJsonBadRecords(spark, path) { (good, bad) =>
+        val nBad = bad.count()
+        if (nBad > 0) System.err.println(s"[source] $nBad malformed source rows skipped")
+        f(good)
+      }
+    else f(Parquet(path).load(spark))
 
   /** P9 per-row error isolation (reference etl.py:180-183 skips a failed
     * issue and continues): malformed source rows land on a bad-record side

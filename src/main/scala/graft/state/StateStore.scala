@@ -1,5 +1,9 @@
 package graft.state
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper, SerializationFeature}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -19,8 +23,11 @@ trait StateStore {
   * goes to a sibling temp path and renames over the target, so a crash
   * mid-write can never leave a truncated document behind (the reference's
   * whole-document flush, state/backends.py:101-141, has the same
-  * read-modify-write semantics but overwrites in place). A state file
-  * that exists but does not parse as a flat string map raises instead of
+  * read-modify-write semantics but overwrites in place). Jackson reads
+  * and writes the document, so any standard JSON writer's escapes load
+  * (Python's `json.dump`, `jq`). A state file that exists but is not one
+  * JSON object of string values (a torn write, an empty file, trailing
+  * tokens, a nested, numeric, array or null value) raises instead of
   * silently returning empty — an empty map here would quietly drop the
   * watermark and trigger a full-corpus rescan.
   */
@@ -29,39 +36,6 @@ final class FileStateStore(uri: String, conf: Configuration = new Configuration(
   private val tmpPath = new Path(path.getParent, "." + path.getName + ".tmp")
   private val asidePath = new Path(path.getParent, "." + path.getName + ".old")
   private def fs: FileSystem = path.getFileSystem(conf)
-
-  private def escape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  private def unescape(s: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '\\' if i + 1 < s.length =>
-          s.charAt(i + 1) match {
-            case '"' => sb += '"'; i += 2
-            case '\\' => sb += '\\'; i += 2
-            case 'n' => sb += '\n'; i += 2
-            case 'r' => sb += '\r'; i += 2
-            case 't' => sb += '\t'; i += 2
-            case 'u' => sb += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-            case c => sb += c; i += 2
-          }
-        case c => sb += c; i += 1
-      }
-    }
-    sb.toString
-  }
-
-  private val pair = """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
 
   private def load(): Map[String, String] = {
     // crash recovery for the non-overwriting-rename fallback in flush():
@@ -74,24 +48,28 @@ final class FileStateStore(uri: String, conf: Configuration = new Configuration(
         s"state recovery failed: could not restore $asidePath -> $path; " +
           "refusing to return an empty watermark state while a committed copy exists")
     if (!fs.exists(path)) return Map.empty
-    val in = fs.open(path)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    // Anything left after removing the recognized pairs must be object
-    // punctuation — otherwise the file is corrupt and we refuse to guess.
-    val leftover = pair.replaceAllIn(text, "").replaceAll("[\\s{},]+", "")
-    if (leftover.nonEmpty || text.trim.isEmpty)
-      throw new IllegalStateException(
-        s"state file $path is not a flat string-map JSON document; " +
-          "refusing to return an empty watermark state from corrupt content")
-    pair.findAllMatchIn(text).map(m => unescape(m.group(1)) -> unescape(m.group(2))).toMap
+    val doc =
+      try {
+        val in = fs.open(path)
+        try FileStateStore.json.readTree(in) finally in.close()
+      } catch {
+        case e: JsonProcessingException => throw corrupt(e.getOriginalMessage, e)
+      }
+    if (doc == null || !doc.isObject) throw corrupt("the top level is not a JSON object")
+    doc.properties().asScala.map { e =>
+      if (!e.getValue.isTextual) throw corrupt(s"the value of ${e.getKey} is not a string")
+      e.getKey -> e.getValue.textValue
+    }.toMap
   }
 
+  private def corrupt(why: String, cause: Throwable = null) = new IllegalStateException(
+    s"state file $path is not a flat string-map JSON document ($why); " +
+      "refusing to return an empty watermark state from corrupt content", cause)
+
   private def flush(m: Map[String, String]): Unit = {
-    val json = m.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${escape(k)}": "${escape(v)}"""" }
-      .mkString("{", ", ", "}")
+    val bytes = FileStateStore.json.writeValueAsBytes(m.asJava)
     val out = fs.create(tmpPath, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    try out.write(bytes) finally out.close()
     // rename is atomic on POSIX local FS (overwrites in place) and
     // consistent under the Hadoop FS contract on object stores — readers
     // see the old or the new document, never a prefix of the new one.
@@ -116,6 +94,12 @@ final class FileStateStore(uri: String, conf: Configuration = new Configuration(
   def get(key: String): Option[String] = load().get(key)
   def set(key: String, value: String): Unit = flush(load() + (key -> value))
   def delete(key: String): Unit = flush(load() - key)
+}
+
+private object FileStateStore {
+  val json: ObjectMapper = new ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+    .enable(SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS)
 }
 
 /** In-memory store for tests / dry runs. */

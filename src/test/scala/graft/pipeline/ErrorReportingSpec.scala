@@ -4,7 +4,9 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.SparkSuite
@@ -69,12 +71,23 @@ class ErrorReportingSpec extends SparkSuite {
 
   test("JSON envelope escapes quotes and newlines in messages") {
     val rep = new HttpErrorReporter("http://127.0.0.1:1/unused")
-    val json = rep.toJson(eventOf(
-      new RuntimeException("he said \"no\"\nand left"), "r@1", Map("k" -> "v\t1")))
+    // ESC, NUL and backspace are control characters JSON must escape too
+    val msg = "he said \"no\"\nand left \u001b[31m \u0000 \b é"
+    val json = rep.toJson(eventOf(new RuntimeException(msg), "r@1", Map("k" -> "v\t1", "a" -> "\\")))
     assert(json.contains("""he said \"no\"\nand left"""))
     assert(json.contains(""""k":"v\t1""""))
-    // the envelope itself must be parseable structure-wise: balanced braces
-    assert(json.count(_ == '{') == json.count(_ == '}'))
+    // the envelope is one strict JSON document, and every field round-trips
+    val doc = new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS).readTree(json)
+    assert(doc.path("release").textValue == "r@1")
+    assert(doc.path("fingerprint").size == 1)
+    assert(doc.path("fingerprint").get(0).textValue == "RuntimeException")
+    val exc = doc.path("exception")
+    assert(exc.path("type").textValue == "java.lang.RuntimeException")
+    assert(exc.path("value").textValue == msg)
+    assert(exc.path("stacktrace").textValue.startsWith(s"java.lang.RuntimeException: $msg"))
+    assert(doc.path("extra").properties().asScala.map(e => e.getKey -> e.getValue.textValue).toMap ==
+      Map("k" -> "v\t1", "a" -> "\\"))
+    assert(doc.properties().asScala.map(_.getKey).toSet == Set("release", "fingerprint", "exception", "extra"))
   }
 
   test("delivery failure is swallowed (the error path never masks the pipeline error)") {

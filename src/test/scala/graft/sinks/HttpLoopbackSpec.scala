@@ -11,7 +11,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.SparkSuite
 
 /** End-to-end wire proof over a loopback HTTP stub: the ClickHouse sink
-  * POSTing real sockets through [[ClickHouseHttpTransport]] (≙
+  * POSTing real sockets through [[HttpTransport]] (≙
   * services/clickhouse.py:72-123 — headers, body-as-SQL, non-2xx →
   * retry) and the DSV2 tracker source fetching pages over HTTP on
   * executor tasks (≙ services/tracker.py:50-67). Zero egress: the
@@ -51,7 +51,7 @@ class HttpLoopbackSpec extends SparkSuite {
 
   test("ClickHouseClient retries a real failed HTTP exchange: 503 -> backoff -> 200") {
     withServer(failFirst = 1)() { (url, received) =>
-      val transport = new ClickHouseHttpTransport(url, user = Some("agile"), password = Some("pw"))
+      val transport = new HttpTransport(url, user = Some("agile"), password = Some("pw"))
       val client = new ClickHouseClient(transport, tries = 3, baseDelayMs = 1)
       assert(client.execute("SELECT 1") == "Ok.")
       // two real exchanges: the 503'd first attempt and the successful retry
@@ -62,7 +62,7 @@ class HttpLoopbackSpec extends SparkSuite {
 
   test("ClickHouseClient exhausts its tries against a persistent failure") {
     withServer(failFirst = 100)() { (url, received) =>
-      val client = new ClickHouseClient(new ClickHouseHttpTransport(url), tries = 3, baseDelayMs = 1)
+      val client = new ClickHouseClient(new HttpTransport(url), tries = 3, baseDelayMs = 1)
       val e = intercept[java.io.IOException](client.execute("SELECT 1"))
       assert(e.getMessage.contains("503"))
       assert(received.size == 3, "expected exactly tries=3 socket exchanges")
@@ -72,7 +72,7 @@ class HttpLoopbackSpec extends SparkSuite {
   test("ClickHouseBatchSink POSTs JSONEachRow batches from executor partitions, retrying transient 503s") {
     import spark.implicits._
     withServer(failFirst = 1)() { (url, received) =>
-      val transport = new ClickHouseHttpTransport(url, user = Some("agile"))
+      val transport = new HttpTransport(url, user = Some("agile"))
       val sink = new ClickHouseBatchSink(sql => { transport(sql); () },
         database = "agile", batchSize = 2, tries = 3)
       val df = (1 to 5).map(i => (i.toLong, s"ISSUE-$i")).toDF("id", "issue_key").repartition(2)
